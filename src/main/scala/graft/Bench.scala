@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -79,15 +81,24 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
+    // queries that threw in any execution: listed in both JSON lines and
+    // fail the run, so a broken query can never just drop out of the total
+    val failed = collection.mutable.LinkedHashSet.empty[String]
+
     // One timed execution: cold DataFrame cache, full materialization.
-    // Returns (wallSec, taskMetricDeltas).
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    // Returns (wallSec, taskMetricDeltas); a wall of -1 marks a failure.
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Array[Long]) = {
       spark.catalog.clearCache()
       val before = listener.snapshot
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return (-1.0, Array.fill(5)(0L)) }
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"bench query $name failed: $e")
+          failed += name
+          return (-1.0, Array.fill(5)(0L))
+      }
       val wall = (System.nanoTime() - t0) / 1e9
       val after = listener.snapshot
       (wall, after.zip(before).map { case (a, b) => a - b })
@@ -100,7 +111,7 @@ object Bench {
     // still interpreting into the first timed round, which inflated
     // reported spread on otherwise-quiet hosts.
     val warmups = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUPS", "2").toInt
-    for (_ <- 1 to warmups) queries.foreach { case (_, fn) => once(fn) }
+    for (_ <- 1 to warmups) queries.foreach { case (name, fn) => once(name, fn) }
 
     // Timed rounds, round-robin, canary before every slot. Each sample
     // keeps its slot's canary so spread can be attributed: a sample taken
@@ -112,7 +123,7 @@ object Bench {
     for (_ <- 1 to rounds; (name, fn) <- queries) {
       val c = canaryOnce()
       canaries += c
-      val (wall, mets) = once(fn)
+      val (wall, mets) = once(name, fn)
       samples(name) = (wall, mets, c) :: samples(name)
     }
 
@@ -161,7 +172,9 @@ object Bench {
       else "{\"min\":" + fmt(cs.head) + ",\"median\":" + fmt(cs(cs.size / 2)) +
         ",\"max\":" + fmt(cs.last) + ",\"n\":" + cs.size + "}"
     val total = perQuery.map(_._2).filter(_ >= 0).sum
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","rounds":$rounds,"rounds_sec":$roundsSec,"spread":$spreads,"canary":$canaryJson,"task_metrics":$mets}""")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val metricLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","rounds":$rounds,"rounds_sec":$roundsSec,"spread":$spreads,"canary":$canaryJson,"task_metrics":$mets}"""
+    println(metricLine)
     // Tail-safe summary: the driver keeps only the LAST ~2000 chars of
     // stdout, which truncates the big line above mid-`task_metrics`. This
     // short second line always survives the tail capture and preserves the
@@ -202,7 +215,7 @@ object Bench {
       "\"" + name + "\":[" +
         samples(name).reverse.map(s => fmt2(s._1)).mkString(",") + "]"
     }.mkString("{", ",", "}")
-    val summaryLine = s"""{"bench_summary":{"total":${fmt(total)},"total_quiet":${fmt(totalQuiet)},"total_norm":${fmt(total * canaryNorm)},"exec_sec_total":${fmt(execTotal)},"canary":$canaryJson,"worst_spread":${fmt(worstSpread)},"worst_spread_quiet":${fmt(worstSpreadQuiet)},"rounds_sec":$roundsSecShort,"queries":$qs}}"""
+    val summaryLine = s"""{"bench_summary":{"total":${fmt(total)},"total_quiet":${fmt(totalQuiet)},"total_norm":${fmt(total * canaryNorm)},"exec_sec_total":${fmt(execTotal)},"canary":$canaryJson,"worst_spread":${fmt(worstSpread)},"worst_spread_quiet":${fmt(worstSpreadQuiet)},"rounds_sec":$roundsSecShort,"queries":$qs,"failed":$failedJson}}"""
     println(summaryLine)
     spark.stop()
     // Parse-proofing (r19): the driver's PERF pipeline read `parsed: null`
@@ -213,12 +226,12 @@ object Bench {
     // spark.stop() so no Spark shutdown logging can interleave, and write
     // both lines to bench_summary.json next to the other artifacts so the
     // numbers are recoverable even if stdout parsing fails again.
-    val metricLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","rounds":$rounds,"rounds_sec":$roundsSec,"spread":$spreads,"canary":$canaryJson,"task_metrics":$mets}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_summary.json"),
       metricLine + "\n" + summaryLine + "\n")
-    catch { case _: Throwable => () } // stdout still carries the contract
+    catch { case NonFatal(_) => () } // stdout still carries the contract
     System.out.println(metricLine)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

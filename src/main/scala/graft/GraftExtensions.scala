@@ -25,6 +25,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // counts) — see BroadcastRowGuard's scaladoc for the scale rationale
     e.injectOptimizerRule(_ => graft.plans.BroadcastRowGuard)
     e.injectRuntimeOptimizerRule(_ => graft.plans.BroadcastRowGuard)
+    // comparison literals in filters and join conditions load from the
+    // plan's references, so plans that differ only in such a value share
+    // one compiled class — see TokenizeLiterals
+    e.injectColumnar(_ => graft.plans.TokenizeLiterals.columnarRule)
 
     e.injectFunction((FunctionIdentifier("l2_distance"),
       info("l2_distance", "l2_distance(a, b) - Euclidean distance of two vectors"),
@@ -44,6 +48,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       case _ => throw new IllegalArgumentException(
         s"$fn: size argument must be an integer literal")
     }
+    // the placeholder of an extended-protocol template (GenericPlans)
+    e.injectFunction((FunctionIdentifier("graft_param"),
+      info("graft_param", "graft_param(n) - placeholder $n of a generic plan"),
+      (es: Seq[Expression]) => graft.plans.ParamRef(intLit(es(0), "graft_param"))))
     e.injectFunction((FunctionIdentifier("word_shingles"),
       info("word_shingles", "word_shingles(text, w) - w-token shingle strings"),
       (es: Seq[Expression]) => WordShingleStrings(es(0), intLit(es(1), "word_shingles"))))

@@ -166,7 +166,8 @@ object Server {
     * (localProperties are an InheritableThreadLocal), so CancelRequest
     * still kills the running statement's jobs.
     */
-  private[graft] final class ResultSpool(engine: Engine, gsess: Session, sql: String) {
+  private[graft] final class ResultSpool(engine: Engine, gsess: Session, sql: String,
+      binding: Option[graft.engine.Binding] = None) {
     private val path = java.nio.file.Files.createTempFile("graft-spool", ".rows")
     private val mon = new Object
     private var written = 0L // rows durably flushed to the spool
@@ -182,6 +183,7 @@ object Server {
         else engine.stmtLock.writeLock
       lock.lock()
       try {
+        gsess.binding = binding
         val df = engine.run(sql, gsess)
         mon.synchronized { schemaOpt = df.schema; mon.notifyAll() }
         val oos = new java.io.ObjectOutputStream(new java.io.BufferedOutputStream(
@@ -1013,7 +1015,8 @@ private object Pgwire {
                 error(s"""unknown prepared statement "$stmtName""""); extFailed = true
               case Some((sql, _)) =>
                 portals.remove(portal).foreach(dropPortal)
-                portals(portal) = new Portal(bindParams(sql, params), resFmts)
+                portals(portal) = new Portal(
+                  graft.engine.Binding(sql, params, bindParams(sql, params)), resFmts)
                 msg('2')(_ => ()) // BindComplete
             }
           } catch {
@@ -1068,7 +1071,7 @@ private object Pgwire {
                   // first Execute opens the spool; later Executes resume
                   // its tail iterator — no lock held between messages
                   if (p.spool == null) {
-                    p.spool = new Server.ResultSpool(engine, gsess, p.sql)
+                    p.spool = new Server.ResultSpool(engine, gsess, p.sql, Some(p.binding))
                     checkBinaryFormats(p.spool.schema, p.resultFormats)
                   }
                   val zone = sessionZone()
@@ -1226,61 +1229,25 @@ private object Pgwire {
     * (non-ANSI) casts coerce string literals in numeric contexts, matching
     * how text-format pgwire parameters behave against real Postgres.
     */
-  private[graft] def bindParams(sql: String, params: Seq[String]): String = {
-    val out = new StringBuilder
-    var i = 0
-    var inStr = false
-    var inIdent = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (!inStr && !inIdent && c == '$' && i + 1 < sql.length &&
-          sql.charAt(i + 1).isDigit) {
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j).isDigit) j += 1
-        val idx = sql.substring(i + 1, j).toInt
-        if (idx < 1 || idx > params.length)
-          throw new IllegalArgumentException(
-            s"parameter $$$idx out of range (${params.length} bound)")
-        out.append(params(idx - 1) match {
-          case null => "NULL"
-          // pg-conforming literal ('' the only escape): the engine's
-          // conformLiterals pass (r17) doubles backslashes once at parse
-          // time for EVERY statement — pre-doubling here would make the
-          // stored text carry two backslashes per one bound
-          case v => "'" + v.replace("'", "''") + "'"
-        })
-        i = j
-      } else {
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (inIdent) { if (c == '"') inIdent = false }
-        else if (c == '\'') inStr = true
-        else if (c == '"') inIdent = true
-        out.append(c)
-        i += 1
+  private[graft] def bindParams(sql: String, params: Seq[String]): String =
+    graft.engine.SqlText.substituteParams(sql, idx => {
+      if (idx < 1 || idx > params.length)
+        throw new IllegalArgumentException(
+          s"parameter $$$idx out of range (${params.length} bound)")
+      params(idx - 1) match {
+        case null => "NULL"
+        // pg-conforming literal ('' the only escape): the engine's
+        // conformLiterals pass (r17) doubles backslashes once at parse
+        // time for EVERY statement — pre-doubling here would make the
+        // stored text carry two backslashes per one bound
+        case v => "'" + v.replace("'", "''") + "'"
       }
-    }
-    out.toString
-  }
+    })
 
   /** Highest `$n` placeholder index outside quotes (0 if none). */
   private[graft] def maxParamIndex(sql: String): Int = {
     var max = 0
-    var i = 0
-    var inStr = false
-    var inIdent = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (inIdent) { if (c == '"') inIdent = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (c == '"') { inIdent = true; i += 1 }
-      else if (c == '$' && i + 1 < sql.length && sql.charAt(i + 1).isDigit) {
-        var j = i + 1
-        while (j < sql.length && sql.charAt(j).isDigit) j += 1
-        max = math.max(max, sql.substring(i + 1, j).toInt)
-        i = j
-      } else i += 1
-    }
+    graft.engine.SqlText.substituteParams(sql, i => { max = math.max(max, i); "" })
     max
   }
 
@@ -1355,13 +1322,16 @@ private object Pgwire {
         }
     }.mkString("{", ",", "}")
 
-  /** One bound portal: the parameter-substituted SQL, the Bind-negotiated
-    * per-column result format codes, and — once Execute opens it — the
+  /** One bound portal: its binding (the Parse text, the values and the
+    * parameter-substituted SQL), the Bind-negotiated per-column result
+    * format codes, and — once Execute opens it — the
     * spool its partial fetches resume from. `done` distinguishes an
     * exhausted portal (re-Execute returns zero rows, pg parity) from a
     * never-executed one.
     */
-  private final class Portal(val sql: String, val resultFormats: Array[Int]) {
+  private final class Portal(val binding: graft.engine.Binding,
+      val resultFormats: Array[Int]) {
+    def sql: String = binding.text
     var spool: Server.ResultSpool = null
     var done = false
     def closeSpool(): Unit = if (spool != null) { spool.close(); spool = null }

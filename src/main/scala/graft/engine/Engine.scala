@@ -1095,11 +1095,48 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     } finally wl.unlock()
   }
 
-  /** Run one statement inside the given session's context. */
+  /** Run one statement inside the given session's context. A bound
+    * extended-protocol statement the server announced on the session
+    * ([[Session.binding]]) is first tried on its template's generic plan.
+    */
   def run(sql: String, session: Session): DataFrame = {
     val prev = sessionTL.get
     sessionTL.set(session)
-    try run(sql) finally sessionTL.set(prev)
+    try {
+      val b = session.binding.filter(_.text == sql)
+      session.binding = None
+      b.flatMap(runGeneric).getOrElse(run(sql))
+    } finally sessionTL.set(prev)
+  }
+
+  /** Serve a bound SELECT from its template's generic plan (see
+    * [[graft.plans.GenericPlans]]), kept in the plan cache under the
+    * rewritten template text. None sends the statement down the
+    * bound-text path: a NULL value, an open transaction, a non-SELECT
+    * template, or a template refused at this plan epoch — one whose
+    * placeholders sit where a value could change the plan (`LIMIT $1`),
+    * that fails analysis, or that fails today's cacheability tests.
+    */
+  private def runGeneric(b: Binding): Option[DataFrame] = {
+    // sequence functions are refused up front: the SELECT path draws
+    // their values before the plan cache is consulted
+    if (b.params.contains(null) || sess.txnOpen || usesSequenceFn(b.template) ||
+        !SqlText.stripComments(b.template).trim.toLowerCase.startsWith("select"))
+      return None
+    val epoch = planCacheEpoch.get
+    if (genericRefused.synchronized(Option(genericRefused.get(b.template)))
+        .exists(_ == epoch)) return None
+    sess.binding = Some(b)
+    val served =
+      try {
+        val df = run(graft.plans.GenericPlans.templateText(b.template))
+        // still set: a path other than the SELECT plan cache took the text
+        if (sess.binding.isEmpty) Some(df) else None
+      } catch { case scala.util.control.NonFatal(_) => None }
+      finally sess.binding = None
+    if (served.isEmpty)
+      genericRefused.synchronized { genericRefused.put(b.template, epoch) }
+    served
   }
 
   /** Rewrite this session's temp aliases to their mangled real names —
@@ -3191,15 +3228,37 @@ class Engine(val spark: SparkSession, val warehouse: String) {
               .findFirstIn(inlined.toLowerCase).isDefined)
           val cacheKey = s"${sess.vectorIndexEnabled}:$inlined"
           val epoch = planCacheEpoch.get
-          val hit = if (cacheable) planCacheGet(cacheKey, epoch) else None
-          // repeatable read: pin/substitute table versions (analysis
-          // happens here, inside the try, while the tt views still exist)
-          snapshotPin(hit.getOrElse {
-            val df = vectorIndexScan(q2).getOrElse(spark.sql(inlined))
-            if (cacheable && planDeterministic(df) && !planTimeDependent(df))
-              planCachePut(cacheKey, epoch, df)
-            df
-          })
+          // a bound extended-protocol SELECT (see runGeneric): `inlined`
+          // is its rewritten template, analyzed and optimized once and
+          // cached under its own key; each execution binds the values
+          // and plans physically. No snapshotPin: no transaction is open.
+          val binding = sess.binding
+          sess.binding = None
+          binding match {
+            case Some(b) =>
+              def refuse = new IllegalArgumentException("no generic plan")
+              if (!cacheable || vectorIndexScan(q2).isDefined) throw refuse
+              val key = "generic:" + cacheKey
+              val template = planCacheGet(key, epoch).getOrElse {
+                val df = spark.sql(inlined)
+                if (!planDeterministic(df) || planTimeDependent(df) ||
+                    !graft.plans.GenericPlans.eligible(df.queryExecution.optimizedPlan))
+                  throw refuse
+                planCachePut(key, epoch, df)
+                df
+              }
+              graft.plans.GenericPlans.bind(spark, template, b.params)
+            case None =>
+              val hit = if (cacheable) planCacheGet(cacheKey, epoch) else None
+              // repeatable read: pin/substitute table versions (analysis
+              // happens here, inside the try, while the tt views still exist)
+              snapshotPin(hit.getOrElse {
+                val df = vectorIndexScan(q2).getOrElse(spark.sql(inlined))
+                if (cacheable && planDeterministic(df) && !planTimeDependent(df))
+                  planCachePut(cacheKey, epoch, df)
+                df
+              })
+          }
           } finally psView.foreach(v =>
             scala.util.Try(spark.catalog.dropTempView(v)))
           } finally ttViews.foreach(v => spark.catalog.dropTempView(v))
@@ -3270,12 +3329,16 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     */
   private val snapshotOverlayDepth = new java.util.concurrent.atomic.AtomicInteger()
   private[engine] def bumpPlanEpoch(): Unit = planCacheEpoch.incrementAndGet()
-  private val planCache =
-    new java.util.LinkedHashMap[String, (Long, DataFrame)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, DataFrame)]): Boolean =
+  private def lru[V](): java.util.LinkedHashMap[String, V] =
+    new java.util.LinkedHashMap[String, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
         size > 64
     }
+  private val planCache = lru[(Long, DataFrame)]()
+  /** Extended-protocol templates refused a generic plan → the epoch of
+    * the verdict; they take the bound-text path until the epoch moves.
+    */
+  private val genericRefused = lru[java.lang.Long]()
   /** observable by tests: proves an EXECUTE loop actually skipped
     * re-planning rather than re-parsing quickly
     */
@@ -7045,12 +7108,15 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     // separate execution and leave these metrics untouched); rows are
     // consumed executor-side, nothing is collected
     df.queryExecution.toRdd.foreach(_ => ())
-    val rows = mutable.Buffer[(Int, String, Long, Long)]()
+    val rows = mutable.Buffer[(Int, String, Long, Double)]()
     def walk(p: org.apache.spark.sql.execution.SparkPlan, depth: Int): Unit = {
       val outRows = p.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
-      val timeMs = p.metrics.collect {
-        case (k, m) if k.toLowerCase.contains("time") => m.value
-      }.foldLeft(0L)(math.max) // ns/ms mixed; report the dominant counter
+      // the largest timer in ms: Spark's "timing" metrics count ms, its
+      // "nsTiming" ones (shuffle write, spill, ...) count ns
+      val timeMs = p.metrics.values.collect {
+        case m if m.metricType == "timing" => m.value.toDouble
+        case m if m.metricType == "nsTiming" => m.value / 1e6
+      }.foldLeft(0.0)(math.max)
       rows += ((depth, p.nodeName, outRows, timeMs))
       val children = p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -7061,7 +7127,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       children.foreach(walk(_, depth + 1))
     }
     walk(df.queryExecution.executedPlan, 0)
-    rows.toSeq.toDF("depth", "operator", "num_output_rows", "max_time_metric")
+    rows.toSeq.toDF("depth", "operator", "num_output_rows", "max_time_ms")
   }
 
   // ---- system tables (reference src/executor/system_table_scan.rs) -------

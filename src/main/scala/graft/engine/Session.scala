@@ -42,6 +42,13 @@ private[engine] final class ScrollCursor(val snap: DataFrame, val ordCol: String
     val total: Long, val schema: StructType, val dir: java.nio.file.Path)
     extends CursorState { var pos: Long = 0L }
 
+/** An extended-protocol statement about to run: its Parse text with `$n`
+  * placeholders, the text values bound to them, and the bound statement
+  * text the server passes to [[Engine.run]].
+  */
+private[graft] final case class Binding(template: String,
+    params: Seq[String], text: String)
+
 /** Per-connection engine session: the transaction block (undo set,
   * abort flag, savepoints) and DECLAREd cursors that used to be
   * engine-global single-instance fields. The Server allocates one per
@@ -145,4 +152,10 @@ final class Session private[engine] (private[graft] val id: Long) {
     */
   private[engine] val tempObjects =
     mutable.LinkedHashMap[String, (String, String)]()
+  /** Set by the server right before it runs a bound portal; the next
+    * top-level [[Engine.run]] of this session takes it and may serve the
+    * statement from its template's generic plan. While the engine plans
+    * the template, it holds the binding again for the SELECT path to take.
+    */
+  @volatile private[graft] var binding: Option[Binding] = None
 }

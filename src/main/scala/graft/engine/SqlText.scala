@@ -349,6 +349,34 @@ private[graft] object SqlText {
       st(i) == StSq || st(i) == StDq || st(i) == StDollar)
   }
 
+  /** Replace each pgwire `$n` placeholder outside single- and
+    * double-quoted text with `render(n)`.
+    */
+  def substituteParams(sql: String, render: Int => String): String = {
+    val out = new StringBuilder
+    var i = 0
+    var inStr = false
+    var inIdent = false
+    while (i < sql.length) {
+      val c = sql.charAt(i)
+      if (!inStr && !inIdent && c == '$' && i + 1 < sql.length &&
+          sql.charAt(i + 1).isDigit) {
+        var j = i + 1
+        while (j < sql.length && sql.charAt(j).isDigit) j += 1
+        out.append(render(sql.substring(i + 1, j).toInt))
+        i = j
+      } else {
+        if (inStr) { if (c == '\'') inStr = false }
+        else if (inIdent) { if (c == '"') inIdent = false }
+        else if (c == '\'') inStr = true
+        else if (c == '"') inIdent = true
+        out.append(c)
+        i += 1
+      }
+    }
+    out.toString
+  }
+
   /** Replace the first `regex` match that lies OUTSIDE string literals
     * (single- or double-quoted) with the literal `replacement`; matches
     * inside literals (with doubled-quote escapes) are skipped, so payload

@@ -23,6 +23,23 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** DataFrame over an already-OPTIMIZED logical plan: its query
+    * execution skips analysis and optimization and starts at physical
+    * planning. Used by the engine's generic plans, which bind parameter
+    * values into a plan optimized once per template.
+    */
+  def ofOptimized(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame = {
+    val qe = new org.apache.spark.sql.execution.QueryExecution(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan) {
+      override def analyzed = plan
+      override def optimizedPlan = plan
+    }
+    new org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row](qe,
+      org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(plan.schema))
+  }
+
   /** Bucket id encoded in a bucketed part-file name (`..._00003.c000...`),
     * parsed by the SAME routine the bucketed reader trusts. The engine's
     * copy-on-write stays FILE-granular under bucket layouts (survivors

@@ -121,6 +121,16 @@ class EngineSpec extends AnyFunSuite {
     assert(rows.exists(r => r.getString(1).toLowerCase.contains("scan")))
     // the scan/filter chain must report the 2 surviving rows somewhere
     assert(rows.exists(_.getLong(2) == 2L))
+    // every timer is in ms: the exchange's ns shuffle-write timer, read as
+    // ms, would exceed the statement's own wall time
+    val t0 = System.nanoTime()
+    val agg = engine.run("explain analyze select v, count(*) from ta group by v")
+    val timed = agg.collect()
+    val wallMs = (System.nanoTime() - t0) / 1e6
+    assert(agg.schema("max_time_ms").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(timed.forall(_.getDouble(3) <= wallMs), timed.mkString("\n"))
+    assert(timed.exists(r => r.getString(1).contains("Exchange") && r.getDouble(3) > 0),
+      timed.mkString("\n"))
   }
 
   test("explain returns a formatted plan") {
