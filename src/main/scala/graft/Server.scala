@@ -28,12 +28,13 @@ import graft.engine.{Engine, Session}
   *            space); then a terminator line `OK <n>` (row count) or
   *            `ERR <message>`.
   *
-  * Concurrency: connections are served on daemon threads; statements gate
-  * on the engine's read-write lock — SELECT-shaped statements share the
-  * read lock and run concurrently, catalog-mutating statements (Spark is
-  * multi-session safe, but DELETE/UPDATE's temp-dir move assumes one
-  * writer and no readers) are exclusive. Each connection owns an engine
-  * Session (its transaction block + cursors — see engine/Session.scala);
+  * Concurrency: connections are served on daemon threads; the engine
+  * decides how each statement is serialized (`Engine.run`: reads
+  * plan under the shared side of its statement lock and stream over
+  * pinned immutable table versions, plain DML is exclusive only to
+  * commit, other statements run exclusively), so the server serializes
+  * nothing itself. Each connection owns an engine Session (its
+  * transaction block + cursors — see engine/Session.scala);
   * cross-session write isolation is NOWAIT table locking. Scale path:
   * run many read sessions against one driver exactly as the Thrift
   * server does; the per-statement work is still fully distributed Spark
@@ -128,39 +129,33 @@ object Server {
     }
   }
 
-  /** Engine-level concurrency gate shared by both protocols: SELECT-shaped
-    * statements run concurrently under the read lock (Spark parallelizes
-    * their jobs); catalog-mutating statements (DDL/DML — the DELETE/UPDATE
-    * temp-dir swap must not race a reader's scan) are exclusive.
+  /** Run one statement and collect its (small) result — shared by both
+    * protocols for statements whose rows are not streamed.
     */
   private[graft] def runStatement(engine: Engine, gsess: Session, sql: String)
       : (StructType, Array[org.apache.spark.sql.Row]) = {
-    val lock =
-      if (Pgwire.isReadOnly(sql)) engine.stmtLock.readLock
-      else engine.stmtLock.writeLock
-    lock.lock()
-    try {
-      val df = engine.run(sql, gsess)
-      (df.schema, df.collect())
-    } finally lock.unlock()
+    val df = engine.run(sql, gsess)
+    val pins = engine.takePins(gsess)
+    try (df.schema, df.collect()) finally engine.unpin(pins)
   }
 
   /** Background-produced, disk-backed result stream. A producer thread
-    * takes the statement lock, runs the statement, and drains
-    * `toLocalIterator` into a spool file on driver-local disk, flushing
-    * row-by-row; the consumer iterator tails the spool and delivers each
-    * row as soon as it is durably written. Properties this buys:
+    * runs the statement and drains `toLocalIterator` into a spool file on
+    * driver-local disk, flushing row-by-row; the consumer iterator tails
+    * the spool and delivers each row as soon as it is durably written.
+    * Properties this buys:
     *
-    *  - **Lock hold is bounded by engine production speed, never client
-    *    pace**: a stalled or slow connection no longer blocks DML
-    *    engine-wide (the pre-r11 streaming held the read lock for the
-    *    whole client drain — the starvation mode SCALING.md documents).
+    *  - **Production holds no lock**: `engine.run` returns a planned
+    *    result over pinned, immutable table versions, so the producer
+    *    executes it while DML commits beside it, and neither a slow
+    *    client nor a big export blocks writers. The producer hands the
+    *    pins back when it finishes, fails or is abandoned.
     *  - **Streaming semantics survive**: rows reach the client as
     *    partitions materialize; a mid-stream failure still delivers every
     *    produced row first, then rethrows (ServerSpec pins this).
     *  - **Driver memory stays bounded** (one partition in, one row out);
     *    the spool trades the old collect's RAM for disk, and a suspended
-    *    pgwire portal can live across protocol messages with NO lock held.
+    *    pgwire portal can live across protocol messages.
     *
     * The producer inherits the session thread's Spark job group
     * (localProperties are an InheritableThreadLocal), so CancelRequest
@@ -178,13 +173,11 @@ object Server {
     @volatile private var waiting = false // consumer blocked on the producer
 
     private val producer = new Thread(() => {
-      val lock =
-        if (Pgwire.isReadOnly(sql)) engine.stmtLock.readLock
-        else engine.stmtLock.writeLock
-      lock.lock()
+      var pins: Seq[java.nio.file.Path] = Nil
       try {
         gsess.binding = binding
         val df = engine.run(sql, gsess)
+        pins = engine.takePins(gsess) // before the session moves on
         mon.synchronized { schemaOpt = df.schema; mon.notifyAll() }
         val oos = new java.io.ObjectOutputStream(new java.io.BufferedOutputStream(
           java.nio.file.Files.newOutputStream(path), 1 << 16))
@@ -217,7 +210,7 @@ object Server {
       } catch {
         case e: Exception =>
           mon.synchronized { failure = e; done = true; mon.notifyAll() }
-      } finally lock.unlock()
+      } finally engine.unpin(pins)
     }, "graft-result-spool")
     producer.setDaemon(true)
     producer.start()
@@ -282,11 +275,10 @@ object Server {
     * spool-tail iterator over the rows (see [[ResultSpool]]) — driver
     * memory is bounded by one partition instead of the whole result, a
     * `SELECT *` over a warehouse-scale table streams through where a
-    * collect would OOM the driver (real Postgres streams too), and the
-    * statement lock is released as soon as the engine finishes producing,
-    * independent of how fast `f`'s client consumes. DML still executes
-    * eagerly inside `engine.run`; its one-row rows_affected result spools
-    * trivially.
+    * collect would OOM the driver (real Postgres streams too), and
+    * neither production nor `f`'s client holds up a writer. DML still
+    * executes eagerly inside `engine.run`; its one-row rows_affected
+    * result spools trivially.
     */
   private[graft] def streamStatement[A](engine: Engine, gsess: Session,
       sql: String)(
@@ -305,10 +297,8 @@ object Server {
   private def execute(engine: Engine, lsess: Session, sql: String,
       out: PrintWriter): Unit = {
     try {
-      // one writer at a time: catalog map updates and the DELETE/UPDATE
-      // temp-dir swaps are engine-level critical sections. Rows stream
-      // partition-by-partition; a failure mid-stream surfaces as a
-      // trailing ERR line after the rows already sent (like pg).
+      // Rows stream partition-by-partition; a failure mid-stream surfaces
+      // as a trailing ERR line after the rows already sent (like pg).
       val n = streamStatement(engine, lsess, sql) { (_, rows) =>
         var count = 0L
         rows.foreach { r =>
@@ -618,10 +608,7 @@ private object Pgwire {
       // (pg answers RowDescription here too, and typed client decoding
       // depends on the oids arriving before the rows).
       if (hasReturning(sql)) {
-        val rl = engine.stmtLock.readLock
-        rl.lock()
-        val schema = try engine.returningSchema(sql) finally rl.unlock()
-        schema match {
+        engine.returningSchema(sql) match {
           case Some(s) => sendRowDescription(s, fmts)
           case None => msg('n')(_ => ())
         }
@@ -631,13 +618,13 @@ private object Pgwire {
         catch { case _: Exception => msg('n')(_ => ()) }
       }
 
-    /** Plan a statement under the read lock and return its schema without
-      * executing a job — safe for SELECT-shaped statements only.
+    /** Plan a statement and return its schema without executing a job —
+      * safe for SELECT-shaped statements only.
       */
     def readSchema(sql: String): StructType = {
-      val rl = engine.stmtLock.readLock
-      rl.lock()
-      try engine.run(sql, gsess).schema finally rl.unlock()
+      val schema = engine.run(sql, gsess).schema
+      engine.unpin(engine.takePins(gsess))
+      schema
     }
     def tableCols(tbl: String): Int =
       // `tbl` is a bare table name or a parenthesized query (COPY (q) TO)
@@ -802,11 +789,7 @@ private object Pgwire {
       * the distributed text COPY — one commit, same hardened reader.
       */
     def copyInBinary(tbl: String): Boolean = {
-      val schema = {
-        val rl = engine.stmtLock.readLock
-        rl.lock()
-        try engine.spark.table(tbl).schema finally rl.unlock()
-      }
+      val schema = engine.tableSchema(tbl)
       msg('G') { d =>
         d.writeByte(1); d.writeShort(schema.length)
         schema.foreach(_ => d.writeShort(1))
@@ -1069,7 +1052,7 @@ private object Pgwire {
                   msg('C')(cstr(_, "SELECT 0"))
                 } else {
                   // first Execute opens the spool; later Executes resume
-                  // its tail iterator — no lock held between messages
+                  // its tail iterator between messages
                   if (p.spool == null) {
                     p.spool = new Server.ResultSpool(engine, gsess, p.sql, Some(p.binding))
                     checkBinaryFormats(p.spool.schema, p.resultFormats)
@@ -1139,9 +1122,9 @@ private object Pgwire {
   /** Renders rows over the wire (RowDescription + DataRows). FETCH always
     * returns rows; EXECUTE renders whatever its prepared body yields (a
     * DML body renders its one-row rows_affected result — visible beats
-    * silently collected-and-discarded). Neither is read-only: FETCH
-    * advances cursor state and EXECUTE may wrap DML, so both stay on the
-    * write lock.
+    * silently collected-and-discarded). Neither is read-only
+    * (`Engine.isReadOnly`): FETCH advances cursor state and EXECUTE may
+    * wrap DML.
     */
   private[graft] def isRowReturning(stmt: String): Boolean =
     Set("SELECT", "VALUES", "WITH", "SHOW", "EXPLAIN", "DESCRIBE",
@@ -1167,25 +1150,6 @@ private object Pgwire {
   private[graft] def isDescribableQuery(stmt: String): Boolean =
     Set("SELECT", "VALUES", "WITH", "SHOW", "EXPLAIN", "DESCRIBE",
       "TABLE", "PRAGMA").contains(keyword(stmt)) || stmt.trim.startsWith("\\")
-
-  /** Safe under the shared READ lock. Narrower than [[isRowReturning]]:
-    * WITH can wrap DML (`WITH x AS (...) INSERT ...`) and PRAGMA mutates
-    * session conf, so both take the write lock even though they render
-    * rows.
-    */
-  private[graft] def isReadOnly(stmt: String): Boolean =
-    (Set("SELECT", "VALUES", "SHOW", "EXPLAIN", "DESCRIBE", "TABLE")
-      .contains(keyword(stmt)) || stmt.trim.startsWith("\\")) &&
-      // nextval/setval mutate engine sequence state (and persist it to
-      // the manifest) even inside a SELECT — route them to the write
-      // lock. Quote-aware: the text inside a string literal is payload.
-      {
-        val mask = graft.engine.SqlText.quotedMask(stmt)
-        val m = """(?i)\b(nextval|setval)\s*\(""".r.pattern.matcher(stmt)
-        var found = false
-        while (!found && m.find()) if (!mask(m.start)) found = true
-        !found
-      }
 
   /** DML results are a single rows_affected row; extract its value. */
   private def rowsAffected(rows: Array[org.apache.spark.sql.Row]): String =
@@ -1227,15 +1191,21 @@ private object Pgwire {
     * parameter values rendered as SQL literals — NULL for a null param,
     * single-quoted with `''` escaping otherwise. The engine's lenient
     * (non-ANSI) casts coerce string literals in numeric contexts, matching
-    * how text-format pgwire parameters behave against real Postgres.
+    * how text-format pgwire parameters behave against real Postgres. A
+    * LIMIT or OFFSET count, which Spark refuses as a string, renders its
+    * integer text bare; any other text there is pg's bigint input error.
     */
   private[graft] def bindParams(sql: String, params: Seq[String]): String =
-    graft.engine.SqlText.substituteParams(sql, idx => {
+    graft.engine.SqlText.substituteParamsAt(sql, (idx, count) => {
       if (idx < 1 || idx > params.length)
         throw new IllegalArgumentException(
           s"parameter $$$idx out of range (${params.length} bound)")
       params(idx - 1) match {
         case null => "NULL"
+        case v if count =>
+          v.trim.toLongOption.map(_.toString).getOrElse(
+            throw new IllegalArgumentException(
+              s"""invalid input syntax for type bigint: "$v""""))
         // pg-conforming literal ('' the only escape): the engine's
         // conformLiterals pass (r17) doubles backslashes once at parse
         // time for EVERY statement — pre-doubling here would make the

@@ -18,12 +18,14 @@ import scala.collection.mutable
   * IndexScan tier (see [[vectorIndexScan]]); `CLUSTERED BY` tables keep
   * a bucketed+sorted layout through every write path.
   *
-  * Storage model: one parquet directory per table under `warehouse/`
-  * (INSERT appends files — the analogue of the reference's LSM rowset
-  * appends; DELETE rewrites — the analogue of its delete-vector compaction,
-  * coarse but single-writer-correct, `src/executor/delete.rs`). At cluster
-  * scale the same layout partitions by file; no driver state grows with
-  * data size.
+  * Storage model: one immutable parquet directory per table VERSION under
+  * `warehouse/.history/<table>/` (INSERT adds files to a new version that links the
+  * previous one's — the analogue of the reference's LSM rowset appends;
+  * DELETE rewrites the touched files — the analogue of its delete-vector
+  * compaction, `src/executor/delete.rs`). Each commit flips the table's
+  * current-version pointer, so readers never see a directory change
+  * under them (see [[history]]). At cluster scale the same layout
+  * partitions by file; no driver state grows with data size.
   */
 class Engine(val spark: SparkSession, val warehouse: String) {
 
@@ -45,14 +47,25 @@ class Engine(val spark: SparkSession, val warehouse: String) {
   // Spark's parser default and instead doubles backslashes inside
   // single-quoted literal content before dispatch.
 
-  /** Statement-level concurrency gate for network front ends: reads
-    * (SELECT-shaped statements) share the read lock and run concurrently —
-    * Spark schedules their jobs in parallel — while catalog-mutating
-    * statements (DDL/DML; the DELETE/UPDATE temp-dir swap must not race a
-    * reader's scan) take the write lock. Single-threaded callers (REPL,
-    * tests) are unaffected.
+  /** Engine-wide statement lock. Reads hold the shared side only while
+    * they are planned; writers take the exclusive side to commit (plain
+    * DML) or for the whole statement (everything else) — see [[run]].
     */
   val stmtLock = new java.util.concurrent.locks.ReentrantReadWriteLock()
+  /** One writer at a time: every statement that is not a read holds it
+    * for its whole run, so the engine's catalog maps only change under
+    * it and plain DML can write its new version with [[stmtLock]] free.
+    */
+  private val writerLock = new java.util.concurrent.locks.ReentrantLock()
+
+  private def exclusively[A](body: => A): A = {
+    // the lock does not upgrade: a read taking it would wait on itself
+    if (stmtLock.getReadHoldCount > 0)
+      throw new IllegalStateException("a read-only statement cannot commit")
+    val wl = stmtLock.writeLock
+    wl.lock()
+    try body finally wl.unlock()
+  }
 
   /** table name → (schema, primary-key columns) */
   private val tables = mutable.LinkedHashMap[String, (StructType, Seq[String])]()
@@ -130,8 +143,8 @@ class Engine(val spark: SparkSession, val warehouse: String) {
   private val missingFill =
     mutable.LinkedHashMap[String, Map[String, Seq[MissingFill]]]()
   /** tables whose live reads go through the fill overlay temp view; the
-    * raw catalog entry then lives under [[rawName]] so bucketed/
-    * partitioned writes can still insertInto a real table
+    * raw catalog entry then lives under [[rawName]] so catalog stats and
+    * ANALYZE still reach a real table
     */
   private val overlayOn = mutable.Set[String]()
   private def rawName(table: String) = s"__graft_raw_$table"
@@ -165,21 +178,25 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     */
   private val matviews = mutable.LinkedHashMap[String, String]()
 
-  /** One committed table state: when it landed, what produced it, and the
+  /** One committed table state: when it landed, what produced it, the
     * schema AT that version (archived snapshots read with this schema, so
-    * an empty snapshot and a pre-ADD-COLUMN one both resolve correctly).
+    * an empty snapshot and a pre-ADD-COLUMN one both resolve correctly),
+    * and the name of its version directory under `.history/<table>`.
     */
-  private case class Commit(ts: Long, op: String, ddl: String)
+  private case class Commit(ts: Long, op: String, ddl: String, dir: String)
   /** table → commit log; the INDEX is the version number (v0 = creation).
-    * The data for every non-current version lives under
-    * `.history/<table>/v<N>` — populated for free on rewrite commits (the
-    * swap's aside dir IS the complete pre-state; one rename archives it)
-    * and via hard links on append commits (parquet files are immutable
-    * here: appends add files, rewrites replace whole directories, so a
-    * link-snapshot costs metadata only, never a data copy). On an object
+    * Every commit writes a NEW immutable directory `.history/<table>/v<N>`,
+    * then flips the table's current-version pointer (the log's last
+    * entry, persisted in the manifest; the catalog LOCATION re-points at
+    * it). Appends hard-link the previous version's files beside the new
+    * ones, rewrites link only the files they did not touch (parquet files
+    * are immutable here, so a link costs metadata only, never a data
+    * copy). The current version and the time-travel versions are the
+    * same directories, and no directory a reader may be scanning changes:
+    * readers plan against one version and execute with no lock held
+    * while writers commit the next (see [[run]]). On an object
     * store the same design keeps a file LIST per version instead of a
-    * linked directory — the delta/iceberg shape; the swap-based layout is
-    * the single-filesystem expression of it.
+    * linked directory — the delta/iceberg shape.
     */
   private val history = mutable.LinkedHashMap[String, Vector[Commit]]()
   /** table → (lowercase column → DEFAULT expression text). Applied when an
@@ -198,9 +215,21 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     */
   private val checks = mutable.LinkedHashMap[String, Vector[(String, String)]]()
 
-  private def tableDir(name: String) = s"$warehouse/$name"
+  /** A table's version directories (`v<N>`) and the IVM delta
+    * recordings of its commits (`d<N>`/`u<N>`).
+    */
   private def historyDir(name: String) = Paths.get(s"$warehouse/.history/$name")
-  private def versionDir(name: String, v: Int) = historyDir(name).resolve(s"v$v")
+  private def versionDir(name: String, v: Int) =
+    historyDir(name).resolve(history(name)(v).dir)
+  /** The current version's directory — where the catalog entry points. */
+  private def tableDir(name: String) =
+    versionDir(name, history(name).length - 1).toString
+  /** The live directory `warehouse/<table>`: hard links of the current
+    * version's files, brought in step at every commit ([[syncLive]]) for
+    * whatever reads a table's files directly (a file streaming source,
+    * external tools). The engine's own reads never touch it.
+    */
+  private def liveDir(name: String) = Paths.get(s"$warehouse/$name")
 
   /** Re-register every view from its SQL text so each scan re-plans over
     * the CURRENT table state (reference semantics: views store SQL, not
@@ -287,21 +316,26 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     pushStats(name) // a re-registration starts statless: restore them
   }
 
-  private def refresh(name: String): Unit = {
-    // a partitioned table's swap can change the PARTITION SET (retention
-    // DELETE drops dirs, TRUNCATE empties); the catalog's partition list
-    // would go stale and scans would chase moved files — re-register
-    // (DROP + CREATE + RECOVER, O(#partitions) metadata). Plain appends
-    // go through insertInto, which registers new partitions itself.
-    // Tables with missing-fill metadata re-register too: a swap may
-    // have retired the last pre-ALTER file, flipping the overlay off.
+  /** Point the catalog entry at the current version directory. */
+  private def refresh(name: String): Unit =
+    // a partitioned table's partition list names per-version directories
+    // (and a commit can change the partition SET: retention DELETE drops
+    // dirs, TRUNCATE empties) — re-register (DROP + CREATE + RECOVER,
+    // O(#partitions) metadata). Tables with missing-fill metadata
+    // re-register too: a commit may have retired the last pre-ALTER
+    // file, flipping the overlay off. Others just move their LOCATION.
     if (partitions.contains(name) || missingFill.contains(name))
       register(name)
     else {
+      val cat = spark.sessionState.catalog
+      val meta = cat.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(name))
+      cat.alterTable(meta.copy(storage = meta.storage.copy(locationUri = Some(
+        org.apache.spark.sql.catalyst.catalog.CatalogUtils.stringToURI(
+          Paths.get(tableDir(name)).toAbsolutePath.toString)))))
       spark.catalog.refreshTable(name)
       applyMockHint(name)
     }
-  }
 
   /** Write the tracked row count (with real on-disk bytes) into the
     * session catalog's stats for `table`, or clear them when the count
@@ -498,7 +532,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
         ledger(c) = merged
       }
       // restart-safety rides the commit's own saveManifest (adoptColObs
-      // runs before recordCommit on every write path)
+      // runs inside the commit on every write path)
     } catch { case _: Exception => } // advisory, never fail a commit
 
   /** Mocked-small tables (`SET mock_rowcount_<t> = n`) shadow their catalog
@@ -1081,33 +1115,57 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     */
   def closeSession(s: Session): Unit = if (s ne defaultSession) {
     openSessions.remove(s.id)
-    val wl = stmtLock.writeLock
-    wl.lock()
-    try {
+    writerLock.lock()
+    try exclusively {
       if (s.txnOpen) run("rollback", s)
       dropSessionTemps(s) // pg: temp objects vanish on disconnect
       s.cursors.values.foreach(c => deleteRecursively(c.dir, keepRoot = false))
       s.cursors.clear()
       releaseTxnLocks(s)
-      // last statement's scoped checkpoints (nothing can read them now)
-      graft.operators.CacheHygiene.release(spark, s.pendingCkptRelease.toSeq)
-      s.pendingCkptRelease.clear()
-    } finally wl.unlock()
+      endStatement(s) // the last statement's checkpoints and pins
+    } finally writerLock.unlock()
   }
 
-  /** Run one statement inside the given session's context. A bound
-    * extended-protocol statement the server announced on the session
-    * ([[Session.binding]]) is first tried on its template's generic plan.
-    */
+  /** Run one statement inside the given session's context. */
   def run(sql: String, session: Session): DataFrame = {
     val prev = sessionTL.get
     sessionTL.set(session)
-    try {
-      val b = session.binding.filter(_.text == sql)
-      session.binding = None
-      b.flatMap(runGeneric).getOrElse(run(sql))
-    } finally sessionTL.set(prev)
+    try run(sql) finally sessionTL.set(prev)
   }
+
+  /** The previous top-level statement of `s` is over: drop its scoped
+    * checkpoints (blocking, so its blocks are gone when the next
+    * statement starts) and the version pins no consumer took over.
+    */
+  private def endStatement(s: Session): Unit = {
+    if (s.pendingCkptRelease.nonEmpty) {
+      graft.operators.CacheHygiene.release(spark, s.pendingCkptRelease.toSeq,
+        blocking = true)
+      s.pendingCkptRelease.clear()
+    }
+    unpin(takePins(s))
+  }
+
+  /** Plain DML: COPY FROM, INSERT, UPDATE, DELETE or MERGE outside a
+    * transaction block, with no CTE or RETURNING, on a table no
+    * materialized view depends on. It writes its new version with
+    * [[stmtLock]] free (see [[run]]). Asked with the writer lock held,
+    * so the catalog it consults is stable.
+    */
+  private def plainDml(stmt: String): Boolean = {
+    val s = SqlText.stripComments(stmt).trim
+    val target = s match {
+      case rePlainDml(a, b, c, d, e) => Seq(a, b, c, d, e).find(_ != null)
+      case _ => None
+    }
+    !sess.txnOpen && SqlText.indexOfTopLevelPhrase(s, Seq("returning")) < 0 &&
+      target.exists(t => tables.contains(t) && !matviews.contains(t) &&
+        !matviewBase.values.exists(_._1.exists(_._1 == t)))
+  }
+  private val rePlainDml =
+    ("""(?is)(?:copy\s+(\w+)\s+from\s|insert\s+into\s+(\w+)\b|""" +
+      """update\s+(\w+)\s+set\s|delete\s+from\s+(\w+)\b|""" +
+      """merge\s+into\s+(\w+)\s).*""").r
 
   /** Serve a bound SELECT from its template's generic plan (see
     * [[graft.plans.GenericPlans]]), kept in the plan cache under the
@@ -1207,6 +1265,9 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     out
   }
 
+  /** The current session's checkpoint ids awaiting release (tests). */
+  private[graft] def pendingCheckpoints: Seq[Int] = sess.pendingCkptRelease.toList
+
   /** `.checkpointScoped` = `.checkpointScoped` + statement-scoped block
     * release (see [[ckptScoped]]) — the drop-in the DML paths use.
     */
@@ -1214,16 +1275,44 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     def checkpointScoped: DataFrame = ckptScoped(df)
   }
 
+  /** Run one statement in the current session. A top-level call ends the
+    * session's previous statement (nested calls — CTE DML members,
+    * matview bodies — must not drop the enclosing statement's blocks)
+    * and decides, from the statement's form alone, how it is serialized
+    * against the others — here, so no front end takes a lock itself:
+    *  - a read ([[Engine.isReadOnly]]) holds the shared side of
+    *    [[stmtLock]] while it is planned and pins the versions it bound;
+    *    the result it returns executes and streams with no lock held;
+    *  - [[plainDml]] serializes on the writer lock and takes the exclusive
+    *    side only for its commit ([[commitVersion]]);
+    *  - everything else (DDL, SET, transaction verbs, DML-CTE overlays:
+    *    statements that change state of the shared SparkSession a
+    *    concurrent plan would see) holds the writer lock, then the
+    *    exclusive side, for the whole statement.
+    * A bound extended-protocol statement the server announced on the
+    * session ([[Session.binding]]) is first tried on its template's
+    * generic plan.
+    */
   def run(sql: String): DataFrame = {
-    // release the PREVIOUS statement's scoped checkpoints (top-level
-    // entries only: nested run() calls — CTE DML members, matview
-    // bodies — must not drop the enclosing statement's blocks)
-    if (sess.runDepth == 0 && sess.pendingCkptRelease.nonEmpty) {
-      graft.operators.CacheHygiene.release(spark, sess.pendingCkptRelease.toSeq)
-      sess.pendingCkptRelease.clear()
+    val s = sess
+    if (s.runDepth > 0) return nested(runInner(sql))
+    endStatement(s)
+    def body(): DataFrame = nested {
+      val b = s.binding.filter(_.text == sql)
+      s.binding = None
+      pinResult(b.flatMap(runGeneric).getOrElse(runInner(sql)))
     }
+    if (Engine.isReadOnly(sql)) readLocked(body())
+    else {
+      writerLock.lock()
+      try if (plainDml(sql)) body() else exclusively(body())
+      finally writerLock.unlock()
+    }
+  }
+
+  private def nested[A](body: => A): A = {
     sess.runDepth += 1
-    try runInner(sql) finally sess.runDepth -= 1
+    try body finally sess.runDepth -= 1
   }
 
   private def runInner(sql: String): DataFrame = {
@@ -1341,12 +1430,24 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     val exprs = splitTopLevel(stmt.substring(idx + "returning".length))
       .map(_.trim).filter(_.nonEmpty)
     val reTab = """(?is)\s*(?:insert\s+into|update|delete\s+from)\s+(\w+)\b.*""".r
-    stmt.substring(0, idx) match {
-      case reTab(table) if tables.contains(table) =>
-        scala.util.Try(spark.table(table).filter(lit(false))
-          .selectExpr(exprs.map(inlineFunctions): _*).schema).toOption
-      case _ => None
+    readLocked {
+      stmt.substring(0, idx) match {
+        case reTab(table) if tables.contains(table) =>
+          scala.util.Try(spark.table(table).filter(lit(false))
+            .selectExpr(exprs.map(inlineFunctions): _*).schema).toOption
+        case _ => None
+      }
     }
+  }
+
+  /** A catalog table's schema, read under the shared lock. */
+  def tableSchema(table: String): org.apache.spark.sql.types.StructType =
+    readLocked(spark.table(table).schema)
+
+  private def readLocked[A](body: => A): A = {
+    val rl = stmtLock.readLock
+    rl.lock()
+    try body finally rl.unlock()
   }
 
   // RETURNING plumbing: set for the duration of one dispatch under the
@@ -1416,7 +1517,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     }
 
   /** First-touch hook: called at the top of every DML path (and
-    * defensively from recordCommit) BEFORE the table mutates, so the
+    * defensively from commitVersion) BEFORE the table mutates, so the
     * undo record captures the pre-statement version and metadata.
     * Also the cross-session gate: errors if a FOREIGN session's open
     * transaction holds the table, and locks it to this session when
@@ -1485,14 +1586,14 @@ class Engine(val spark: SparkSession, val warehouse: String) {
   }
 
   /** Atomic multi-table restore to the txn-start versions. Runs under the
-    * statement write lock (the Server routes ROLLBACK there), so no
-    * reader interleaves with the per-table directory swaps. Matview
+    * statement write lock (ROLLBACK is an exclusive statement), so no
+    * read plans against a half-restored set of tables. Matview
     * anchors whose delta window extends past a rolled-back version are
     * dropped — the next REFRESH recomputes fully and re-anchors, the
     * same safety net as the crash latch.
     */
-  /** Restore one table to the state an undo record captured: data via
-    * the two-rename snapshot swap, metadata from the record, history
+  /** Restore one table to the state an undo record captured: data by
+    * flipping back to the snapshot's version, metadata from the record, history
     * truncated so the undone commits vanish from time travel, and any
     * matview anchor whose delta window crosses the restore point
     * dropped (crash-latch full-recompute contract).
@@ -1505,28 +1606,18 @@ class Engine(val spark: SparkSession, val warehouse: String) {
         val snap = versionDir(t, u.version)
         require(Files.isDirectory(snap),
           s"cannot roll back $t: the version ${u.version} snapshot is gone")
-        // rebuild the live dir via the same two-rename swap as
-        // rewriteSwap: link the snapshot into a tmp dir, swap it in
-        val tmp = Paths.get(s"$warehouse/.$t.rollback.tmp")
-        if (Files.exists(tmp)) deleteRecursively(tmp, keepRoot = false)
-        Files.createDirectories(tmp)
-        linkTree(snap, tmp)
-        val live = Paths.get(tableDir(t))
-        val aside = Paths.get(s"$warehouse/.$t.old.tmp")
-        if (Files.exists(aside)) deleteRecursively(aside, keepRoot = false)
-        Files.move(live, aside)
-        try Files.move(tmp, live)
-        catch { case e: Throwable => Files.move(aside, live); throw e }
-        deleteRecursively(aside, keepRoot = false)
-        // versions born past the restore point vanish: truncate the
-        // log and reclaim their archives + IVM delta recordings, so
-        // DESCRIBE HISTORY / time travel are unpolluted
+        // a pointer flip: the restore point's directory becomes current
+        // again, and the versions born past it vanish — the log truncates
+        // and their directories (retired while a reader pins them) and
+        // IVM delta recordings are reclaimed, so DESCRIBE HISTORY / time
+        // travel are unpolluted
+        val born = ((u.version + 1) to cur).map(v => versionDir(t, v))
         history(t) = log.take(u.version + 1)
+        born.foreach(reclaim)
         ((u.version + 1) to cur).foreach { v =>
-          Seq(versionDir(t, v), deleteDeltaDir(t, v), updateAddDir(t, v))
-            .foreach { d =>
-              if (Files.exists(d)) deleteRecursively(d, keepRoot = false)
-            }
+          Seq(deleteDeltaDir(t, v), updateAddDir(t, v)).foreach { d =>
+            if (Files.exists(d)) deleteRecursively(d, keepRoot = false)
+          }
         }
       }
       tables(t) = (u.schema, u.pk)
@@ -1545,6 +1636,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       colStatsLedger.remove(t)
       register(t)
       refresh(t)
+      syncLive(t)
       matviewBase.keys.toSeq.foreach { m =>
         val (anchors, _) = matviewBase(m)
         if (anchors.exists { case (b, av) => b == t && av > u.version } ||
@@ -2258,19 +2350,15 @@ class Engine(val spark: SparkSession, val warehouse: String) {
         return spark.read.schema(schema).parquet(paths: _*)
       // partitioned base (r18): appended leaf files carry their
       // partition values in k=v path segments — group them by version
-      // root (live dir or .history/<t>/vN) and read each group with
-      // basePath so those values resolve. Delete/update delta DIRS
-      // materialize the partition columns as data (or preserve the k=v
-      // tree for discovery) and read plain.
-      val liveRoot = Paths.get(tableDir(base)).toAbsolutePath
-      val histRoot = historyDir(base).toAbsolutePath
+      // directory (.history/<t>/vN) and read each group with basePath so those
+      // values resolve. Delete/update delta DIRS materialize the
+      // partition columns as data (or preserve the k=v tree for
+      // discovery) and read plain.
+      val root = historyDir(base).toAbsolutePath
       val (dirs, files) = paths.partition(p => Files.isDirectory(Paths.get(p)))
-      def rootOf(p: String): String = {
-        val ap = Paths.get(p).toAbsolutePath
-        if (ap.startsWith(histRoot)) // .history/<t>/vN/<k=v>/file
-          histRoot.resolve(ap.getName(histRoot.getNameCount).toString).toString
-        else liveRoot.toString
-      }
+      def rootOf(p: String): String = // .history/<t>/vN/<k=v>/file
+        root.resolve(Paths.get(p).toAbsolutePath
+          .getName(root.getNameCount).toString).toString
       val frames = files.groupBy(rootOf).toSeq.map { case (root, fs) =>
           spark.read.schema(schema).option("basePath", root).parquet(fs: _*) } ++
         (if (dirs.nonEmpty)
@@ -3070,12 +3158,10 @@ class Engine(val spark: SparkSession, val warehouse: String) {
           ("""(?i)\b""" + java.util.regex.Pattern.quote(t) + """\b""").r
             .findFirstIn(outside).isDefined
       }
-      // pin the statement-start image: the idempotent archive hard-links
-      // the live files into the current version dir, which a member's
-      // swap never touches — so the snapshot frame stays readable even
-      // after the live directory is rewritten mid-statement
+      // pin the statement-start image: the current version directory,
+      // which a member's commit never touches — so the snapshot frame
+      // stays readable after the table moves on mid-statement
       val snaps: Map[String, DataFrame] = referenced.map { t =>
-        archiveCurrent(t)
         val log = history(t)
         t -> spark.read.schema(StructType.fromDDL(log.last.ddl))
           .parquet(versionDir(t, log.length - 1).toString)
@@ -3353,19 +3439,85 @@ class Engine(val spark: SparkSession, val warehouse: String) {
   private def planCachePut(key: String, epoch: Long, df: DataFrame): Unit =
     planCache.synchronized { planCache.put(key, (epoch, df)); () }
 
-  /** Append one commit to `table`'s log (schema captured NOW = the
-    * post-commit state) and persist — the log is load-bearing across
-    * engine restarts like the rest of the catalog.
+  /** A fresh, empty directory for `table`'s next version: `v<N>`, or the
+    * first free `v<N>_<k>` while a directory of that name survives (a
+    * rolled-back or dropped version some reader still pins). Callers
+    * write it completely before [[commitVersion]] makes it current.
     */
-  private def recordCommit(table: String, op: String): Unit = {
-    txnTouch(table) // defensive: no-op when the DML path already touched
-    history(table) = history.getOrElse(table,
-      Vector(Commit(0L, "create table", tables(table)._1.toDDL))) :+
-      Commit(System.currentTimeMillis(), op, tables(table)._1.toDDL)
-    saveManifest()
+  private def newVersionDir(table: String): java.nio.file.Path = {
+    val n = history.get(table).map(_.length).getOrElse(0)
+    val root = historyDir(table)
+    var dir = root.resolve(s"v$n")
+    var k = 0
+    while (Files.exists(dir)) { k += 1; dir = root.resolve(s"v${n}_$k") }
+    Files.createDirectories(dir)
+    dir
   }
 
-  /** Hard-link every file under `src` into `dst` (dirs recreated). Falls
+  /** Flip `table`'s current-version pointer to the complete directory
+    * `dir`: log the commit (schema captured NOW = the post-commit state),
+    * update the ledgers, re-point the catalog and persist — all under the
+    * write side of [[stmtLock]], so no statement plans against a
+    * half-flipped table. The log is load-bearing across engine restarts
+    * like the rest of the catalog.
+    */
+  private def commitVersion(table: String, dir: java.nio.file.Path,
+      op: String)(ledger: => Unit): Unit = {
+    beforeCommit(table)
+    exclusively {
+      txnTouch(table)
+      history(table) = history(table) :+ Commit(System.currentTimeMillis(),
+        op, tables(table)._1.toDDL, dir.getFileName.toString)
+      ledger
+      refresh(table)
+      saveManifest()
+      pushStats(table)
+    }
+    syncLive(table) // read by no statement: outside the lock
+  }
+
+  /** Runs as a commit starts, before its lock (tests park writers here). */
+  @volatile private[graft] var beforeCommit: String => Unit = _ => ()
+
+  /** Bring the live directory in step with the current version: link the
+    * files it lacks, then drop the ones the version no longer has (file
+    * names are unique per write job, so a shared name is a shared inode).
+    */
+  private def syncLive(table: String): Unit = {
+    val live = liveDir(table)
+    val cur = Paths.get(tableDir(table))
+    def files(root: java.nio.file.Path): Set[String] =
+      if (!Files.isDirectory(root)) Set.empty
+      else {
+        val st = Files.walk(root)
+        try {
+          import scala.jdk.CollectionConverters._
+          st.iterator().asScala.filter(Files.isRegularFile(_))
+            .map(root.relativize(_).toString).toSet
+        } finally st.close()
+      }
+    val want = files(cur)
+    val have = files(live)
+    Files.createDirectories(live)
+    (want -- have).foreach { f =>
+      val dst = live.resolve(f)
+      Files.createDirectories(dst.getParent)
+      linkOrCopy(dst, cur.resolve(f))
+    }
+    (have -- want).foreach(f => Files.delete(live.resolve(f)))
+  }
+
+  /** A commit that changes metadata only: the new version hard-links
+    * every file of the current one.
+    */
+  private def linkCommit(table: String, op: String): Unit = {
+    val dir = newVersionDir(table)
+    linkTree(Paths.get(tableDir(table)), dir)
+    commitVersion(table, dir, op)(())
+  }
+
+  /** Hard-link every file under `src` into `dst` (dirs recreated), skipping
+    * names `dst` already holds (a write job's `_SUCCESS` marker). Falls
     * back to a copy only where the filesystem refuses links.
     */
   private def linkTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
@@ -3375,31 +3527,122 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       stream.iterator().asScala.filter(_ != src).foreach { p =>
         val rel = dst.resolve(src.relativize(p).toString)
         if (Files.isDirectory(p)) Files.createDirectories(rel)
-        else {
+        else if (!Files.exists(rel)) {
           Files.createDirectories(rel.getParent)
-          try Files.createLink(rel, p)
-          catch { case _: UnsupportedOperationException |
-                       _: java.nio.file.FileSystemException =>
-            Files.copy(p, rel)
-          }
+          linkOrCopy(rel, p)
         }
       }
     } finally stream.close()
   }
 
-  /** Snapshot the CURRENT state of `table` as its current version number,
-    * by hard links (append-style commits call this BEFORE writing; the
-    * data files are immutable, so links are exact and O(#files) metadata).
-    * Idempotent: a crashed attempt's orphan is replaced. A failure AFTER
-    * this but before the commit's log entry leaves an unreferenced vN dir
-    * that the next commit of the same version number replaces.
+  // ---- version pins --------------------------------------------------------
+  // A statement's result executes after run() returns, with no lock held.
+  // Every version directory its plan reads is pinned until the reader
+  // ends (see [[takePins]]); VACUUM, DROP and a rollback retire a pinned
+  // directory instead of deleting it, and its last unpin deletes it.
+
+  /** pinned path (a version directory or a file inside one) → readers */
+  private val pins = mutable.Map[java.nio.file.Path, Int]()
+  /** directories no version refers to any more, awaiting their last unpin */
+  private val retired = mutable.Set[java.nio.file.Path]()
+
+  private def held(dir: java.nio.file.Path): Boolean =
+    pins.keys.exists(p => p.startsWith(dir) || dir.startsWith(p))
+
+  /** Delete `dir` now, or — while a reader pins it or something inside
+    * it — retire what is pinned and delete the rest. True when nothing
+    * was left behind.
     */
-  private def archiveCurrent(table: String): Unit =
-    history.get(table).foreach { log =>
-      val dst = versionDir(table, log.length - 1)
-      if (Files.exists(dst)) deleteRecursively(dst, keepRoot = false)
-      Files.createDirectories(dst)
-      linkTree(Paths.get(tableDir(table)), dst)
+  private def reclaim(dir: java.nio.file.Path): Boolean = pins.synchronized {
+    if (!Files.exists(dir)) true
+    else if (!held(dir)) { deleteRecursively(dir, keepRoot = false); true }
+    else if (pins.keys.exists(dir.startsWith)) { retired += dir; false }
+    else children(dir).map(reclaim).forall(identity)
+  }
+
+  private def children(dir: java.nio.file.Path): List[java.nio.file.Path] = {
+    val st = Files.list(dir)
+    try { import scala.jdk.CollectionConverters._; st.iterator().asScala.toList }
+    finally st.close()
+  }
+
+  private def isRetired(dir: java.nio.file.Path): Boolean =
+    pins.synchronized(retired.exists(dir.startsWith))
+
+  /** False once VACUUM reclaimed (or retired) version `v`'s directory. */
+  private def versionAvailable(table: String, v: Int): Boolean = {
+    val dir = versionDir(table, v)
+    Files.exists(dir) && !isRetired(dir)
+  }
+
+  /** Warehouse paths the plan of `df` reads: the root of every file
+    * relation (a version directory, or the files a raw scan names).
+    */
+  private def planRoots(df: DataFrame): Seq[java.nio.file.Path] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val wh = Paths.get(warehouse).toAbsolutePath.normalize
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location.rootPaths
+    }.flatten.map(p => Paths.get(p.toUri).normalize).filter(_.startsWith(wh))
+      .distinct
+  }
+
+  /** Make a statement's result safe to execute with no lock held (the
+    * caller holds the statement's lock): partitioned scans get a fixed
+    * file listing in place of their catalog-backed index (Spark would
+    * re-read the catalog at execution, and adaptive re-planning again),
+    * the physical plan is built now, and the versions read are pinned on
+    * the session until [[takePins]] hands them to the consumer or the
+    * session's next statement releases them.
+    */
+  private def pinResult(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{CatalogFileIndex, HadoopFsRelation, LogicalRelation}
+    val catalogIndexed: PartialFunction[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+        (LogicalRelation, HadoopFsRelation, CatalogFileIndex)] = {
+      case lr @ LogicalRelation(h @ HadoopFsRelation(c: CatalogFileIndex, _, _, _, _, _), _, _, _, _) =>
+        (lr, h, c)
+    }
+    val opt = df.queryExecution.optimizedPlan
+    val out = if (opt.collectWithSubqueries(catalogIndexed).isEmpty) df else
+      org.apache.spark.sql.graftbridge.Bridge.ofOptimized(spark,
+        opt.transformUpWithSubqueries(catalogIndexed.andThen { case (lr, h, c) =>
+          lr.copy(relation = h.copy(location = c.filterPartitions(Nil))(h.sparkSession))
+        }))
+    out.queryExecution.executedPlan
+    val roots = planRoots(out)
+    if (roots.nonEmpty) {
+      pins.synchronized(roots.foreach(p => pins(p) = pins.getOrElse(p, 0) + 1))
+      val s = sess
+      s.pins.synchronized(s.pins ++= roots)
+    }
+    out
+  }
+
+  /** Hand over the version pins of `s`'s last statement: the caller
+    * reads its result and passes them to [[unpin]] when it stops — the
+    * server's result spool does so when its producer finishes, fails or
+    * is abandoned. Pins nobody takes end at the session's next top-level
+    * statement or when the session closes.
+    */
+  def takePins(s: Session): Seq[java.nio.file.Path] = s.pins.synchronized {
+    val out = s.pins.toList
+    s.pins.clear()
+    out
+  }
+
+  /** Release pins from [[takePins]]; a retired directory goes with its
+    * last pin.
+    */
+  def unpin(paths: Seq[java.nio.file.Path]): Unit = if (paths.nonEmpty)
+    pins.synchronized {
+      paths.foreach { p =>
+        val n = pins.getOrElse(p, 0) - 1
+        if (n > 0) pins(p) = n else pins.remove(p)
+      }
+      retired.toList.filterNot(held).foreach { r =>
+        retired -= r
+        if (Files.exists(r)) deleteRecursively(r, keepRoot = false)
+      }
     }
 
   /** The table as of version `v`: the live table for the current version,
@@ -3414,9 +3657,9 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       s"version $v of $table does not exist (current version: $cur)")
     if (v == cur) spark.table(table)
     else {
-      val dir = versionDir(table, v)
-      require(Files.exists(dir),
+      require(versionAvailable(table, v),
         s"version $v of $table has been vacuumed")
+      val dir = versionDir(table, v)
       // archived snapshots hard-link the same files by the same names,
       // so the missing-fill overlay applies identically (a version
       // whose schema predates the fill column skips it by construction)
@@ -3625,15 +3868,16 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     val cur = log.length - 1
     log.zipWithIndex.reverse.map { case (c, v) =>
       (v.toLong, java.time.Instant.ofEpochMilli(c.ts).toString, c.op,
-        v == cur || Files.exists(versionDir(table, v)))
+        v == cur || versionAvailable(table, v))
     }.toDF("version", "committed_at", "operation", "available")
   }
 
-  /** VACUUM <t> [RETAIN n VERSIONS]: drop archived snapshots beyond the
-    * `n` newest (default 0 = all history data; the log itself stays, so
-    * DESCRIBE HISTORY still shows what happened). Returns the number of
-    * snapshots reclaimed. Hard links make this exact: removing a snapshot
-    * frees a file only when no other version (or the live dir) links it.
+  /** VACUUM <t> [RETAIN n VERSIONS]: drop version directories beyond the
+    * `n` newest (default 0 = every version but the current one; the log
+    * itself stays, so DESCRIBE HISTORY still shows what happened).
+    * Returns the number of directories reclaimed. Hard links make this
+    * exact: removing a version frees a file only when no other version
+    * links it.
     */
   private def vacuum(table: String, retain: Int): DataFrame = {
     val cur = history.getOrElse(table, Vector.empty).length - 1
@@ -3650,11 +3894,14 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       .reduceOption(_ min _).getOrElse(Int.MaxValue)
     var reclaimed = 0L
     (0 until math.min(cur - retain, undoFloor)).foreach { v =>
-      // version archives plus any IVM delete/update deltas recorded for
-      // commits this far back (a refresh needing one that's gone falls
-      // back to full recompute — the same contract as a vacuumed version)
-      Seq(versionDir(table, v), deleteDeltaDir(table, v),
-          updateAddDir(table, v)).foreach { d =>
+      // version directories plus any IVM delete/update deltas recorded
+      // for commits this far back (a refresh needing one that's gone
+      // falls back to full recompute — the same contract as a vacuumed
+      // version). A version a reader still pins is skipped: it is
+      // retired, and goes at its last unpin.
+      val vd = versionDir(table, v)
+      if (Files.exists(vd) && !isRetired(vd) && reclaim(vd)) reclaimed += 1
+      Seq(deleteDeltaDir(table, v), updateAddDir(table, v)).foreach { d =>
         if (Files.exists(d)) {
           deleteRecursively(d, keepRoot = false)
           reclaimed += 1
@@ -3678,7 +3925,6 @@ class Engine(val spark: SparkSession, val warehouse: String) {
               .foreach(p => alive += p.getFileName.toString)
           } finally st.close()
         }
-      basenames(Paths.get(tableDir(table)))
       basenames(historyDir(table))
       val kept = m.map { case (c, gens) =>
         c -> gens.filter(_.files.exists(alive))
@@ -4842,9 +5088,9 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     }
     if (alwaysCols.nonEmpty) identityAlways(name) = alwaysCols.toSet
     if (pendingGens.nonEmpty) generatedCols(name) = pendingGens.toMap
-    history(name) = Vector(
-      Commit(System.currentTimeMillis(), "create table", schema.toDDL))
-    Files.createDirectories(Paths.get(tableDir(name)))
+    history(name) = Vector(Commit(System.currentTimeMillis(), "create table",
+      schema.toDDL, newVersionDir(name).getFileName.toString))
+    Files.createDirectories(liveDir(name))
     rowCounts(name) = 0L // ledger baseline: a new table is empty
     register(name)
     saveManifest()
@@ -4876,16 +5122,18 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     bucketSpec.foreach { case (c, n) =>
       buckets(name) = (schema.fieldNames.find(_.equalsIgnoreCase(c)).get, n)
     }
+    val dir = newVersionDir(name)
     try {
-      Files.createDirectories(Paths.get(tableDir(name)))
-      rowCounts(name) = 0L // baseline; appendTo adds the observed delta
+      history(name) = Vector(Commit(System.currentTimeMillis(),
+        "create table as select", schema.toDDL, dir.getFileName.toString))
+      rowCounts(name) = 0L // baseline; the write adds the observed delta
       register(name)
       val obs = org.apache.spark.sql.Observation()
-      appendTo(name, df.observe(obs, count(lit(1)).as("n")))
+      writeAppend(name, df.observe(obs, count(lit(1)).as("n")), dir)()
       refresh(name)
-      history(name) = Vector(Commit(System.currentTimeMillis(),
-        "create table as select", schema.toDDL))
       saveManifest()
+      pushStats(name)
+      syncLive(name)
       rowCountResult(observedCount(obs))
     } catch {
       case e: Exception => // failed write: don't leave a phantom catalog entry
@@ -4893,6 +5141,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
         partitions.remove(name)
         rowCounts.remove(name); colStatsLedger.remove(name)
         spark.sql(s"DROP TABLE IF EXISTS `$name`")
+        reclaim(historyDir(name))
         throw e
     }
   }
@@ -4947,8 +5196,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
         // metadata-only, but still a commit: the pre-ADD version's log
         // entry already pins the narrower schema, so its archived read
         // excludes the column; the files are unchanged (links, no copy)
-        archiveCurrent(table)
-        recordCommit(table, s"add column $colName")
+        linkCommit(table, s"add column $colName")
         emptyResult
       case Some(d) =>
         // pg semantics: existing rows take the default. Like pg 11+, a
@@ -4986,8 +5234,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
             // metadata-only, but still a commit (same shape as the bare
             // ADD COLUMN above): the archived version pins the narrower
             // schema; every data file keeps its inode
-            archiveCurrent(table)
-            recordCommit(table, s"add column $colName")
+            linkCommit(table, s"add column $colName")
             saveManifest()
             emptyResult
           case None =>
@@ -5096,8 +5343,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       if (f.name.equalsIgnoreCase(colName)) f.copy(nullable = !set) else f)),
       pk)
     register(table)
-    archiveCurrent(table)
-    recordCommit(table,
+    linkCommit(table,
       s"alter column ${field.name} ${if (set) "set" else "drop"} not null")
     saveManifest()
     emptyResult
@@ -5200,8 +5446,9 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     emptyResult
   }
 
-  /** RENAME TO: move the directory and every catalog reference (bucket
-    * spec, indexes); the single-writer lock serializes it against readers.
+  /** RENAME TO: link the version directories under the new name, then
+    * move every catalog reference (bucket spec, indexes); the old
+    * directories are reclaimed once no reader pins them.
     */
   private def alterRenameTable(from: String, to: String): DataFrame = {
     require(!tables.contains(to) && !views.contains(to),
@@ -5209,7 +5456,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     spark.sql(s"DROP TABLE IF EXISTS `$from`")
     spark.sql(s"DROP TABLE IF EXISTS `${rawName(from)}`")
     spark.catalog.dropTempView(from)
-    Files.move(Paths.get(tableDir(from)), Paths.get(tableDir(to)))
+    if (Files.exists(liveDir(from))) Files.move(liveDir(from), liveDir(to))
     tables(to) = tables.remove(from).get
     buckets.remove(from).foreach(b => buckets(to) = b)
     partitions.remove(from).foreach(p => partitions(to) = p)
@@ -5219,11 +5466,10 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       val (t, c, m, o) = indexes(ix)
       if (t.equalsIgnoreCase(from)) indexes(ix) = (to, c, m, o)
     }
-    // history travels with the table (snapshots + log under the new name)
-    if (Files.exists(historyDir(from))) {
-      Files.createDirectories(historyDir(to).getParent)
-      Files.move(historyDir(from), historyDir(to))
-    }
+    // history travels with the table (versions + IVM deltas under the
+    // new name): linked, as a reader may still scan the old directories
+    linkTree(historyDir(from), historyDir(to))
+    reclaim(historyDir(from))
     history.remove(from).foreach(log => history(to) = log)
     defaults.remove(from).foreach(d => defaults(to) = d)
     rowCounts.remove(from).foreach(n => rowCounts(to) = n)
@@ -5240,8 +5486,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       }
     }
     register(to)
-    archiveCurrent(to)
-    recordCommit(to, s"rename from $from")
+    linkCommit(to, s"rename from $from")
     emptyResult
   }
 
@@ -5250,24 +5495,13 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     */
   private def truncate(table: String): DataFrame = {
     txnTouch(table)
-    // move, don't delete: the pre-truncate directory IS the archived
-    // version (one rename — and TRUNCATE becomes an undoable commit:
-    // INSERT INTO t SELECT * FROM t VERSION AS OF k restores it)
-    history.get(table) match {
-      case Some(log) =>
-        val dst = versionDir(table, log.length - 1)
-        if (Files.exists(dst)) deleteRecursively(dst, keepRoot = false)
-        Files.createDirectories(dst.getParent)
-        Files.move(Paths.get(tableDir(table)), dst)
-        Files.createDirectories(Paths.get(tableDir(table)))
-      case None =>
-        deleteRecursively(Paths.get(tableDir(table)), keepRoot = true)
+    // an empty new version: the pre-truncate one stays as it was (an
+    // undoable commit: INSERT INTO t SELECT * FROM t VERSION AS OF k
+    // restores it)
+    commitVersion(table, newVersionDir(table), "truncate") {
+      rowCounts(table) = 0L
+      colStatsLedger.remove(table) // empty table: no column stats
     }
-    rowCounts(table) = 0L
-    colStatsLedger.remove(table) // empty table: no column stats
-    refresh(table)
-    recordCommit(table, "truncate")
-    pushStats(table)
     emptyResult
   }
 
@@ -5305,10 +5539,10 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       sequences.filterInPlace { case (_, st) =>
         !st.owner.exists(_._1.equalsIgnoreCase(name)) }
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      val dir = Paths.get(tableDir(name))
-      if (Files.exists(dir)) deleteRecursively(dir, keepRoot = false)
-      if (Files.exists(historyDir(name)))
-        deleteRecursively(historyDir(name), keepRoot = false)
+      if (Files.exists(liveDir(name)))
+        deleteRecursively(liveDir(name), keepRoot = false)
+      // a version a reader still scans goes at its last unpin
+      reclaim(historyDir(name))
     } else views.remove(name)
     spark.catalog.dropTempView(name)
     // a session dropping its own temp object by alias arrives here with
@@ -5465,10 +5699,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
         // RETURNING list over the checkpointed frame — still one
         // execution of a SELECT source.
         val mat = alignedSource(table, colList, source).checkpointScoped
-        archiveCurrent(table)
-        appendTo(table, mat)
-        refresh(table)
-        recordCommit(table, "insert")
+        appendCommit(table, mat, "insert")
         captureReturning(mat)
         rowCountResult(mat.count())
       case None =>
@@ -5478,10 +5709,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
         val obs = org.apache.spark.sql.Observation()
         val out = alignedSource(table, colList, source)
           .observe(obs, count(lit(1)).as("n"))
-        archiveCurrent(table)
-        appendTo(table, out)
-        refresh(table)
-        recordCommit(table, "insert")
+        appendCommit(table, out, "insert")
         rowCountResult(observedCount(obs))
     }
   }
@@ -5543,10 +5771,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
             m
           } else toIns0
           recordUpsertDelta(existing.limit(0), toInsRaw)
-          archiveCurrent(table)
-          appendTo(table, toIns)
-          refresh(table)
-          recordCommit(table, "upsert")
+          appendCommit(table, toIns, "upsert")
           rowCountResult(observedCount(obs))
         } finally newRows.unpersist()
       case Some(sets) =>
@@ -5700,27 +5925,41 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     df.filter(guards.reduce(_ && _))
   }
 
-  private def appendTo(table: String, df0: DataFrame): Unit = {
+  /** Write `df0`'s rows into the empty version directory `dir` in the
+    * table's layout (see [[writeTmp]]), checked against its constraints.
+    * The row-count ledger rides the write as an observe metric — no
+    * second scan; a missing baseline stays missing (no stats). The
+    * PK/CLUSTERED BY column stats ride the SAME metric set. Returns the
+    * ledger update, for the commit to apply.
+    */
+  private def writeAppend(table: String, df0: DataFrame,
+      dir: java.nio.file.Path): () => Unit = {
     val df = constraintGuard(table, df0)
-    txnTouch(table) // before the first data file lands
-    // the row-count ledger rides the write as an observe metric — no
-    // second scan; a missing baseline stays missing (no stats). The
-    // PK/CLUSTERED BY column stats ride the SAME metric set.
     val obsN = org.apache.spark.sql.Observation()
     val statCols = autoStatCols(table).filter(df.columns.contains)
-    val counted = df.observe(obsN,
-      count(lit(1)).as("n"), colObsMetrics(statCols, df.schema): _*)
-    // bucketed and/or partitioned layouts write through the catalog
-    // entry: the bucketed writer hashes rows into named bucket files,
-    // and the partitioned writer lands rows in their k=v directories
-    // AND registers any new partitions with the catalog
-    if (buckets.contains(table) || partitions.contains(table))
-      counted.write.insertInto(catName(table))
-    else counted.write.mode("append").parquet(tableDir(table))
-    rowCounts.get(table).foreach(prev =>
-      rowCounts(table) = prev + observedCount(obsN))
-    adoptColObs(table, obsN, statCols, rewrite = false)
-    pushStats(table)
+    writeTmp(table, df.observe(obsN,
+      count(lit(1)).as("n"), colObsMetrics(statCols, df.schema): _*), dir)
+    () => {
+      rowCounts.get(table).foreach(prev =>
+        rowCounts(table) = prev + observedCount(obsN))
+      adoptColObs(table, obsN, statCols, rewrite = false)
+    }
+  }
+
+  /** Append `df` as a new version of `table`: its rows land in a fresh
+    * directory, the current version's files are hard-linked beside them,
+    * then the pointer flips.
+    */
+  private def appendCommit(table: String, df: DataFrame, op: String): Unit = {
+    txnTouch(table) // before the first data file lands
+    val dir = newVersionDir(table)
+    val ledger =
+      try {
+        val l = writeAppend(table, df, dir)
+        linkTree(Paths.get(tableDir(table)), dir)
+        l
+      } catch { case e: Throwable => deleteRecursively(dir, keepRoot = false); throw e }
+    commitVersion(table, dir, op)(ledger())
   }
 
   /** DELETE: anti-filter rewrite — keep rows where cond is not TRUE (3VL).
@@ -6152,14 +6391,15 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     else Some((touched, untouched))
   }
 
-  /** Materialize `df` into a swap's tmp dir honoring the table's layout:
-    * plain parquet, or — for a CLUSTERED BY table — through a scratch
-    * external catalog table carrying the same bucketBy/sortBy spec
-    * (bucket ids live in part-file names, so only the bucketed writer
-    * produces a directory that stays valid under the catalog entry after
-    * the swap; the scratch name dodges user tables and drops immediately,
-    * external → the files survive). ONE copy shared by the full and the
-    * file-granular rewrite commits, so the dance can never diverge.
+  /** Materialize `df` into a new version directory honoring the table's
+    * layout: plain parquet, partitioned `k=v` directories, or — for a
+    * CLUSTERED BY table — through a scratch external catalog table
+    * carrying the same bucketBy/sortBy spec (bucket ids live in part-file
+    * names, so only the bucketed writer produces a directory that stays
+    * valid under the catalog entry; the scratch name dodges user tables
+    * and drops immediately, external → the files survive). ONE copy
+    * shared by every commit that writes rows, so the dance can never
+    * diverge.
     */
   private def writeTmp(table: String, df: DataFrame,
       tmp: java.nio.file.Path): Unit = (buckets.get(table),
@@ -6184,14 +6424,13 @@ class Engine(val spark: SparkSession, val warehouse: String) {
   }
 
   /** Commit a FILE-GRANULAR rewrite: materialize the rewritten survivors
-    * of the touched files into the temp dir (None when no file matched),
-    * HARD-LINK every untouched file beside them — same inode, zero I/O —
-    * then run the identical two-rename swap + version-archival as
-    * [[rewriteSwap]]. A selective DELETE/UPDATE now costs O(matched
-    * files), not O(table): at 100 TB a one-row DELETE rewrites one file
-    * and links the rest, while the archived version still holds the
-    * complete pre-state (the moved live dir owns the shared inodes too,
-    * so time travel, RESTORE and VACUUM are unchanged).
+    * of the touched files into a new version directory (None when no file
+    * matched), HARD-LINK every untouched file beside them — same inode,
+    * zero I/O — then flip the pointer like [[rewriteSwap]]. A selective
+    * DELETE/UPDATE costs O(matched files), not O(table): at 100 TB a
+    * one-row DELETE rewrites one file and links the rest, while the
+    * previous version still holds the complete pre-state (time travel,
+    * RESTORE and VACUUM are unchanged).
     *
     * The row-count ledger is DECREMENTED by `ledgerDelta` (evaluated
     * after the write job, when the observe metrics exist) instead of
@@ -6203,62 +6442,37 @@ class Engine(val spark: SparkSession, val warehouse: String) {
   private def rewriteSwapPartial(table: String, survivors: Option[DataFrame],
       untouched: Seq[java.nio.file.Path], op: String)(ledgerDelta: => Long): Unit = {
     txnTouch(table) // before any mutation, same ordering as rewriteSwap
-    val tmp = Paths.get(s"$warehouse/.$table.rewrite.tmp")
     val live = Paths.get(tableDir(table))
-    val aside = Paths.get(s"$warehouse/.$table.old.tmp")
-    if (Files.exists(tmp)) deleteRecursively(tmp, keepRoot = false)
-    survivors match {
-      case Some(df) => writeTmp(table, constraintGuard(table, df), tmp)
-      case None => Files.createDirectories(tmp)
-    }
-    // untouched files carry fresh UUID part names from their own write
-    // jobs — they can never collide with the survivors' new part names.
-    // Linked at their path RELATIVE to the live root (r18), so a
-    // partitioned table's untouched files stay in their k=v directories
-    // (flat tables: relative path == file name, unchanged behavior)
-    untouched.foreach { f =>
-      val dst = tmp.resolve(live.relativize(f).toString)
-      Files.createDirectories(dst.getParent)
-      linkOrCopy(dst, f)
-    }
-    if (Files.exists(aside)) deleteRecursively(aside, keepRoot = false)
-    Files.move(live, aside)
-    try Files.move(tmp, live)
-    catch { case e: Throwable => Files.move(aside, live); throw e }
-    history.get(table) match {
-      case Some(log) =>
-        val dst = versionDir(table, log.length - 1)
-        if (Files.exists(dst)) deleteRecursively(dst, keepRoot = false)
+    val dir = newVersionDir(table)
+    try {
+      survivors.foreach(df => writeTmp(table, constraintGuard(table, df), dir))
+      // untouched files carry fresh UUID part names from their own write
+      // jobs — they can never collide with the survivors' new part names.
+      // Linked at their path RELATIVE to the version root (r18), so a
+      // partitioned table's untouched files stay in their k=v directories
+      // (flat tables: relative path == file name)
+      untouched.foreach { f =>
+        val dst = dir.resolve(live.relativize(f).toString)
         Files.createDirectories(dst.getParent)
-        Files.move(aside, dst)
-      case None => deleteRecursively(aside, keepRoot = false)
+        linkOrCopy(dst, f)
+      }
+    } catch { case e: Throwable => deleteRecursively(dir, keepRoot = false); throw e }
+    commitVersion(table, dir, op) {
+      rowCounts.get(table).foreach(prev => rowCounts(table) = prev - ledgerDelta)
     }
-    refresh(table)
-    recordCommit(table, op)
-    rowCounts.get(table).foreach(prev => rowCounts(table) = prev - ledgerDelta)
-    pushStats(table)
   }
 
-  /** Materialize `rewritten` into a sibling temp dir, then swap it in as
-    * the table directory — the single-writer commit shared by DELETE,
-    * UPDATE and OPTIMIZE. The dotted temp names sit outside the \w+
-    * table-name alphabet, so they can never collide with a real table
-    * directory (a table named `x__rewrite` used to be clobbered by
-    * `DELETE FROM x`).
-    *
-    * Crash story: the write materializes fully BEFORE any mutation (a
-    * failed rewrite leaves the table untouched), and the commit itself is
-    * two same-filesystem directory renames — live→aside, tmp→live — not a
-    * delete-then-copy of individual files. A crash between the renames
-    * leaves the complete old data in the aside dir (recoverable by one
-    * rename); no interleaving loses rows. The aside dir is removed only
-    * after the new directory is in place, and a stale aside from a
-    * previous crash is cleared first.
+  /** Materialize `rewritten` into a new version directory and make it
+    * current — the commit shared by DELETE, UPDATE, MERGE, OPTIMIZE and
+    * RESTORE. The write materializes fully BEFORE anything a reader can
+    * see moves (a failed rewrite leaves the table untouched and its
+    * directory removed); the commit itself is a pointer flip, and the
+    * previous version's directory stays as it was.
     */
   private def rewriteSwap(table: String, rewrittenRaw: DataFrame,
       op: String): Unit = {
     val rewritten0 = constraintGuard(table, rewrittenRaw)
-    txnTouch(table) // before the live directory moves
+    txnTouch(table) // before the table moves
     // a rewrite materializes the COMPLETE post-state: counting it as it
     // writes keeps the row-count ledger exact for delete/update/merge/
     // optimize/restore/refresh without any extra scan
@@ -6267,31 +6481,15 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     val rewritten = rewritten0.observe(obsN,
       count(lit(1)).as("n"),
       colObsMetrics(statCols, rewritten0.schema, withHist = true): _*)
-    val tmp = Paths.get(s"$warehouse/.$table.rewrite.tmp")
-    val live = Paths.get(tableDir(table))
-    val aside = Paths.get(s"$warehouse/.$table.old.tmp")
-    writeTmp(table, rewritten, tmp)
-    if (Files.exists(aside)) deleteRecursively(aside, keepRoot = false)
-    Files.move(live, aside)
-    try Files.move(tmp, live)
-    catch { case e: Throwable => Files.move(aside, live); throw e }
-    // the aside dir IS the complete pre-commit state: one rename turns it
-    // into the archived version — rewrite commits snapshot for free
-    history.get(table) match {
-      case Some(log) =>
-        val dst = versionDir(table, log.length - 1)
-        if (Files.exists(dst)) deleteRecursively(dst, keepRoot = false)
-        Files.createDirectories(dst.getParent)
-        Files.move(aside, dst)
-      case None => deleteRecursively(aside, keepRoot = false)
+    val dir = newVersionDir(table)
+    try writeTmp(table, rewritten, dir)
+    catch { case e: Throwable => deleteRecursively(dir, keepRoot = false); throw e }
+    commitVersion(table, dir, op) {
+      // a rewrite observed the COMPLETE post-state: the ledger entry is
+      // replaced outright (and persisted by the commit's manifest save)
+      adoptColObs(table, obsN, statCols, rewrite = true)
+      rowCounts(table) = observedCount(obsN)
     }
-    refresh(table)
-    // a rewrite observed the COMPLETE post-state: the ledger entry is
-    // replaced outright (and persisted by recordCommit's manifest save)
-    adoptColObs(table, obsN, statCols, rewrite = true)
-    recordCommit(table, op)
-    rowCounts(table) = observedCount(obsN)
-    pushStats(table)
   }
 
   private def parquetFileCount(table: String): Long =
@@ -6706,10 +6904,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     if (insertOnly) {
       // no matched action → existing rows are untouched; the new rows
       // APPEND (bucket-layout-aware) instead of rewriting the table
-      archiveCurrent(tgt)
-      appendTo(tgt, inserted.get)
-      refresh(tgt)
-      recordCommit(tgt, "merge")
+      appendCommit(tgt, inserted.get, "merge")
       rowCountResult(observedCount(insObs))
     } else {
       // file-granular fast path (r16): only target files holding a row
@@ -6958,10 +7153,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     // single pass: rows_affected observed on the same job that writes (the
     // former count() pre-pass re-read the whole source)
     val obs = org.apache.spark.sql.Observation()
-    archiveCurrent(table)
-    appendTo(table, df.observe(obs, count(lit(1)).as("n")))
-    refresh(table)
-    recordCommit(table, "copy from")
+    appendCommit(table, df.observe(obs, count(lit(1)).as("n")), "copy from")
     rowCountResult(observedCount(obs))
   }
 
@@ -7186,7 +7378,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
           val cur = log.length - 1
           log.zipWithIndex.map { case (c, v) =>
             (t, v.toLong, java.time.Instant.ofEpochMilli(c.ts).toString,
-              c.op, v == cur || Files.exists(versionDir(t, v)))
+              c.op, v == cur || versionAvailable(t, v))
           }
         }.toDF("tablename", "version", "committed_at", "operation",
           "available")
@@ -7338,11 +7530,12 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     val historyJson = obj(history.map { case (t, commits) =>
       s"${q(t)}: [${commits.map(c =>
         s"{${q("ts")}: ${c.ts}, ${q("op")}: ${q(c.op)}, " +
-          s"${q("ddl")}: ${q(c.ddl)}}").mkString(",")}]"
+          s"${q("ddl")}: ${q(c.ddl)}, ${q("dir")}: ${q(c.dir)}}").mkString(",")}]"
     })
-    // Temp-then-atomic-rename, mirroring rewriteSwap's commit pattern: the
-    // manifest is load-bearing on reopen, and an in-place truncate-then-write
-    // crash would leave a corrupt catalog with no recovery path.
+    // Temp-then-atomic-rename: the manifest is load-bearing on reopen (it
+    // holds every table's current-version pointer), and an in-place
+    // truncate-then-write crash would leave a corrupt catalog with no
+    // recovery path.
     val tmp = Paths.get(s"$warehouse/._catalog.json.tmp")
     Files.writeString(tmp,
       s"""{${q("tables")}: $tablesJson, ${q("views")}: $viewsJson, """ +
@@ -7374,23 +7567,13 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     * format (top-level = tables map) still loads.
     */
   private def loadManifest(): Unit = {
-    // Sweep crash debris before anything that can throw: a crash after the
-    // tmp write of rewriteSwap (or of saveManifest itself) leaves dotted
-    // temp dirs/files that would otherwise linger until the next rewrite of
-    // that same table.
-    locally {
-      val stream = Files.list(Paths.get(warehouse))
-      try {
-        import scala.jdk.CollectionConverters._
-        stream.iterator().asScala
-          .filter { p =>
-            val n = p.getFileName.toString
-            n.endsWith(".rewrite.tmp") || n == "._catalog.json.tmp"
-          }
-          .toList
-          .foreach(p => deleteRecursively(p, keepRoot = false))
-      } finally stream.close()
-    }
+    // hidden entries other than the version store are debris: a crash
+    // inside saveManifest leaves its temp file, and older releases'
+    // in-place swaps left dotted temp directories
+    children(Paths.get(warehouse)).filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith(".") && n != ".history" && n != ".ivm_aux"
+    }.foreach(p => deleteRecursively(p, keepRoot = false))
     if (!Files.exists(manifestPath)) return
     val root =
       try new com.fasterxml.jackson.databind.ObjectMapper()
@@ -7453,17 +7636,34 @@ class Engine(val spark: SparkSession, val warehouse: String) {
         }
         colStatsLedger(e.getKey) = cols
       }
+    // the commit logs BEFORE the tables loop: each log's last entry is
+    // the current-version pointer register() points the catalog at
+    if (root.has("history"))
+      fields(root.get("history")).foreach { e =>
+        history(e.getKey) = (0 until e.getValue.size()).map { i =>
+          val n = e.getValue.get(i)
+          Commit(n.get("ts").asLong(), n.get("op").asText(),
+            n.get("ddl").asText(),
+            if (n.has("dir")) n.get("dir").asText() else s"v$i")
+        }.toVector
+      }
     val tablesNode = if (root.has("tables")) root.get("tables") else root
     fields(tablesNode).foreach { e =>
-      // crash recovery for the rewrite swap: a failure between its two
-      // renames leaves the live dir missing and the COMPLETE old data in
-      // the aside dir — one rename restores it (see rewriteSwap)
-      val live = Paths.get(tableDir(e.getKey))
-      val aside = Paths.get(s"$warehouse/.${e.getKey}.old.tmp")
-      if (!Files.exists(live) && Files.exists(aside)) Files.move(aside, live)
+      val t = e.getKey
       val schema = StructType.fromDDL(e.getValue.get("ddl").asText())
-      tables(e.getKey) = (schema, texts(e.getValue.get("pk")))
-      register(e.getKey)
+      tables(t) = (schema, texts(e.getValue.get("pk")))
+      if (!history.contains(t))
+        history(t) = Vector(Commit(0L, "create table", schema.toDDL, "v0"))
+      // crash debris: a version directory no commit names was written by
+      // a statement that died before its pointer flip
+      val named = history(t).map(_.dir).toSet
+      if (Files.isDirectory(historyDir(t)))
+        children(historyDir(t)).filter { d =>
+          val n = d.getFileName.toString
+          n.startsWith("v") && !named(n)
+        }.foreach(d => deleteRecursively(d, keepRoot = false))
+      register(t)
+      syncLive(t)
     }
     if (root.has("defaults"))
       fields(root.get("defaults")).foreach { e =>
@@ -7489,20 +7689,6 @@ class Engine(val spark: SparkSession, val warehouse: String) {
         generatedCols(e.getKey) = fields(e.getValue)
           .map(c => c.getKey -> c.getValue.asText()).toMap
       }
-    if (root.has("history"))
-      fields(root.get("history")).foreach { e =>
-        history(e.getKey) = (0 until e.getValue.size()).map { i =>
-          val n = e.getValue.get(i)
-          Commit(n.get("ts").asLong(), n.get("op").asText(),
-            n.get("ddl").asText())
-        }.toVector
-      }
-    // tables from a pre-time-travel manifest: synthesize a creation commit
-    // (epoch timestamp = honestly unknown) so versioning starts now
-    tables.keys.foreach { t =>
-      if (!history.contains(t))
-        history(t) = Vector(Commit(0L, "create table", tables(t)._1.toDDL))
-    }
     if (root.has("views"))
       fields(root.get("views")).foreach(e => views(e.getKey) = e.getValue.asText())
     if (root.has("matviews"))
@@ -7557,4 +7743,29 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       scala.util.Try(drop(if (views.contains(n)) "view" else "table", n))
     }
   }
+}
+
+object Engine {
+
+  /** Statements that only read: they run under the shared side of the
+    * statement lock while planned and execute with no lock held (see
+    * `Engine.run`). WITH can wrap DML (`WITH x AS (...) INSERT ...`)
+    * and PRAGMA mutates session conf, so both are excluded even though
+    * they render rows; FETCH advances cursor state and EXECUTE may run
+    * wrapped DML.
+    */
+  def isReadOnly(stmt: String): Boolean =
+    (Set("SELECT", "VALUES", "SHOW", "EXPLAIN", "DESCRIBE", "TABLE")
+      .contains(stmt.trim.split("\\s+").headOption.getOrElse("").toUpperCase) ||
+      stmt.trim.startsWith("\\")) &&
+      // nextval/setval mutate engine sequence state (and persist it to
+      // the manifest) even inside a SELECT — they run exclusively.
+      // Quote-aware: the text inside a string literal is payload.
+      {
+        val mask = SqlText.quotedMask(stmt)
+        val m = """(?i)\b(nextval|setval)\s*\(""".r.pattern.matcher(stmt)
+        var found = false
+        while (!found && m.find()) if (!mask(m.start)) found = true
+        !found
+      }
 }

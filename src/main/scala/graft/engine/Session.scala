@@ -79,6 +79,11 @@ final class Session private[engine] (private[graft] val id: Long) {
     * whole lifetime (r18 left this as the known remaining leak).
     */
   private[engine] val pendingCkptRelease = mutable.Buffer[Int]()
+  /** Version directories the last top-level statement's result reads
+    * (see [[Engine.takePins]]): released at the next top-level statement
+    * unless a consumer took them over first.
+    */
+  private[engine] val pins = mutable.Buffer[java.nio.file.Path]()
   /** Re-entrancy depth of [[Engine.run]]: internal statements (CTE DML
     * members, matview refresh bodies) must not release the enclosing
     * statement's checkpoints mid-flight.

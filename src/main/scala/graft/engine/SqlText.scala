@@ -352,7 +352,25 @@ private[graft] object SqlText {
   /** Replace each pgwire `$n` placeholder outside single- and
     * double-quoted text with `render(n)`.
     */
-  def substituteParams(sql: String, render: Int => String): String = {
+  def substituteParams(sql: String, render: Int => String): String =
+    substituteParamsAt(sql, (n, _) => render(n))
+
+  /** [[substituteParams]] whose `render` also learns whether the
+    * placeholder sits directly after the word LIMIT or OFFSET (comments
+    * and whitespace between them skipped) — a count, not a value.
+    */
+  def substituteParamsAt(sql: String, render: (Int, Boolean) => String): String = {
+    lazy val st = scanStates(sql)
+    def afterLimit(at: Int): Boolean = {
+      var j = at - 1
+      while (j >= 0 && (sql(j).isWhitespace || st(j) == StLine || st(j) == StBlock))
+        j -= 1
+      val end = j + 1
+      while (j >= 0 && st(j) == StOut && (sql(j).isLetterOrDigit || sql(j) == '_'))
+        j -= 1
+      val w = sql.substring(j + 1, end)
+      w.equalsIgnoreCase("limit") || w.equalsIgnoreCase("offset")
+    }
     val out = new StringBuilder
     var i = 0
     var inStr = false
@@ -363,7 +381,7 @@ private[graft] object SqlText {
           sql.charAt(i + 1).isDigit) {
         var j = i + 1
         while (j < sql.length && sql.charAt(j).isDigit) j += 1
-        out.append(render(sql.substring(i + 1, j).toInt))
+        out.append(render(sql.substring(i + 1, j).toInt, afterLimit(i)))
         i = j
       } else {
         if (inStr) { if (c == '\'') inStr = false }

@@ -52,10 +52,13 @@ object CacheHygiene {
     (out, ids)
   }
 
-  /** Drop the blocks of previously [[checkpointTracked]] rounds. */
-  def release(spark: org.apache.spark.sql.SparkSession, ids: Seq[Int]): Unit = {
+  /** Drop the blocks of previously [[checkpointTracked]] rounds;
+    * `blocking` waits until the block manager has removed them.
+    */
+  def release(spark: org.apache.spark.sql.SparkSession, ids: Seq[Int],
+      blocking: Boolean = false): Unit = {
     val live = spark.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
+    ids.foreach(id => live.get(id).foreach(_.unpersist(blocking)))
   }
 
   /** Variant for operators whose cached frame must survive `n` query

@@ -28,32 +28,37 @@ class CkptHygieneSpec extends AnyFunSuite {
 
   test("DML session does not accumulate persistent checkpoint RDDs") {
     val eng = freshEngine("ckpt-soak")
-    eng.run("create table ck(id bigint, v double)")
-    eng.run("insert into ck values (1, 1.0), (2, 2.0)")
-    // settle: release the create/insert statements' own blocks
-    eng.run("select count(*) from ck").collect()
-    val base = spark.sparkContext.getPersistentRDDs.size
+    // only the RDDs this engine checkpointed count: other suites sharing
+    // the Spark session (and asynchronous cleaners) persist RDDs too
+    val tracked = scala.collection.mutable.Set[Int]()
+    def run(sql: String): org.apache.spark.sql.DataFrame = {
+      val df = eng.run(sql)
+      tracked ++= eng.pendingCheckpoints
+      df
+    }
+    def live: Set[Int] =
+      spark.sparkContext.getPersistentRDDs.keySet.toSet.intersect(tracked)
+    run("create table ck(id bigint, v double)")
+    run("insert into ck values (1, 1.0), (2, 2.0)")
     for (i <- 3 to 12) {
       // nondeterministic source -> INSERT draws it once via checkpoint
-      eng.run(s"insert into ck select $i, rand()")
+      run(s"insert into ck select $i, rand()")
       // RETURNING paths checkpoint the post-/pre-image frames
-      eng.run(s"update ck set v = v + 1 where id = $i returning id").collect()
-      eng.run(s"delete from ck where id = ${i - 2} returning id").collect()
+      run(s"update ck set v = v + 1 where id = $i returning id").collect()
+      run(s"delete from ck where id = ${i - 2} returning id").collect()
     }
     // MERGE pins its source once via checkpoint when nondeterministic
-    eng.run("create table cksrc(id bigint, v double)")
-    eng.run("insert into cksrc select 100, rand()")
-    eng.run("merge into ck using cksrc on ck.id = cksrc.id " +
+    run("create table cksrc(id bigint, v double)")
+    run("insert into cksrc select 100, rand()")
+    run("merge into ck using cksrc on ck.id = cksrc.id " +
       "when matched then update set v = cksrc.v " +
       "when not matched then insert (id, v) values (cksrc.id, cksrc.v)")
-    // one more statement releases the MERGE's blocks
-    val n = eng.run("select count(*) from ck").collect()(0).getLong(0)
+    assert(tracked.nonEmpty, "the DML mix checkpointed nothing")
+    // one more statement releases the MERGE's blocks; a SELECT
+    // checkpoints nothing, and the release blocks until the blocks are
+    // gone, so any tracked RDD still persistent here is a leak
+    val n = run("select count(*) from ck").collect()(0).getLong(0)
     assert(n > 0)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    // the session may hold at most the LAST statement's pending blocks
-    // (released at the next statement); a SELECT checkpoints nothing, so
-    // growth here means a leak
-    assert(after <= base,
-      s"persistent RDDs grew across a DML session: $base -> $after")
+    assert(live.isEmpty, s"checkpoint RDDs outlived their statements: $live")
   }
 }

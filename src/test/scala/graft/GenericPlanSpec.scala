@@ -70,16 +70,22 @@ class GenericPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "select i, s from gp where i = $1" -> Seq(null),
       "select i from gp where b > $1" -> Seq((rng.nextInt(40) * 10000000000L).toString),
       "select i from gp where s = $1 or i < $2" -> Seq("v3", key),
-      "select i from gp order by i limit $1" -> Seq("5"),
       "select upper($1) as u, i from gp where i = 2" -> Seq("x")) ++ Seq.fill(3)(
       "select count(*) as n from gp where d between $1 and $2" -> Seq(dayKey, dayKey)) ++ Seq.fill(2)(
       "select i from gp where ts >= $1 and ts < $2" -> Seq(stamp(rng.nextInt(40)), stamp(rng.nextInt(40))))
-    // a failure is an outcome too: `LIMIT '5'` fails analysis on both paths
+    // a failure is an outcome too
     def outcome(df: => DataFrame) = scala.util.Try(rows(df)).toOption
     cases.foreach { case (template, params) =>
       val text = Pgwire.bindParams(template, params)
       assert(outcome(bound(s, template, params)) == outcome(engine.run(text)), text)
     }
+    // a LIMIT count binds as the integer it is: the literal text's rows
+    val limited = "select i from gp order by i limit $1"
+    assert(Pgwire.bindParams(limited, Seq(" 5")) == "select i from gp order by i limit 5")
+    assert(rows(bound(s, limited, Seq("5"))) ==
+      rows(engine.run("select i from gp order by i limit 5")))
+    val err = intercept[IllegalArgumentException](Pgwire.bindParams(limited, Seq("five")))
+    assert(err.getMessage == "invalid input syntax for type bigint: \"five\"")
   }
 
   test("a template runs generic only where a value cannot change the plan") {

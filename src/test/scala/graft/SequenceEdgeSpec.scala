@@ -27,8 +27,8 @@ class SequenceEdgeSpec extends AnyFunSuite {
     val r = engine.run("select 'use nextval(''sq'')' as s").collect()
     assert(r.length == 1 && r(0).getString(0) == "use nextval('sq')")
     // ... and such a SELECT stays on the shared read lock
-    assert(Pgwire.isReadOnly("select 'use nextval(''sq'')'"))
-    assert(!Pgwire.isReadOnly("select nextval('sq')"))
+    assert(Engine.isReadOnly("select 'use nextval(''sq'')'"))
+    assert(!Engine.isReadOnly("select nextval('sq')"))
   }
 
   test("refused oversized block reservation leaves sequence state intact") {

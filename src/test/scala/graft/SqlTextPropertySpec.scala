@@ -32,7 +32,7 @@ object SqlTextPropertySpec extends Properties("SqlText") {
     forAll(sqlGen) { s => SqlText.mapOutsideQuotes(s, identity) == s }
 
   // quotedMask is load-bearing for five rewrites (sequence fns,
-  // current_setting/version, pg_settings rename, Server.isReadOnly):
+  // current_setting/version, pg_settings rename, Engine.isReadOnly):
   // it must mark EXACTLY the literal spans — agreeing with
   // mapOutsideQuotes, whose outside-segments are by construction the
   // unmasked characters
