@@ -23,6 +23,10 @@ class SnapshotReadSpec extends AnyFunSuite with TimeLimits {
   implicit val signaler: Signaler = ThreadSignaler
   private val limit = Span(60, Seconds)
 
+  /** A fresh warehouse directory under the build's `target/graft-tmp`. */
+  private def warehouse(name: String): String =
+    freshDir(Paths.get("target/graft-tmp", name).toAbsolutePath.toString)
+
   private def versions(wh: String, table: String): Set[String] = {
     val d = Paths.get(s"$wh/.history/$table")
     if (!Files.isDirectory(d)) Set.empty
@@ -67,7 +71,7 @@ class SnapshotReadSpec extends AnyFunSuite with TimeLimits {
     }.getOrElse(fail(s"no DataRow in ${msgs.map(_._1).mkString}"))
 
   test("aggregates beside an UPDATE/DELETE/MERGE loop each read one committed state") {
-    val dir = freshDir("/root/repo/target/graft-tmp/snapshot-loop-warehouse")
+    val dir = warehouse("snapshot-loop-warehouse")
     val engine = new Engine(spark, dir)
     engine.run("create table t(k int, v bigint)")
     (0 until 3).foreach(i => engine.run(
@@ -120,7 +124,7 @@ class SnapshotReadSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("a reader parked mid-production does not hold up a DML commit") {
-    val dir = freshDir("/root/repo/target/graft-tmp/snapshot-park-warehouse")
+    val dir = warehouse("snapshot-park-warehouse")
     val engine = new Engine(spark, dir)
     val a = engine.newSession()
     val b = engine.newSession()
@@ -152,7 +156,7 @@ class SnapshotReadSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("a SELECT completes while a DML writer is parked before its commit") {
-    val dir = freshDir("/root/repo/target/graft-tmp/snapshot-writer-warehouse")
+    val dir = warehouse("snapshot-writer-warehouse")
     val engine = new Engine(spark, dir)
     val w = engine.newSession()
     val r = engine.newSession()
@@ -181,7 +185,7 @@ class SnapshotReadSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("a pinned version survives VACUUM and DROP until its reader ends") {
-    val dir = freshDir("/root/repo/target/graft-tmp/snapshot-pin-warehouse")
+    val dir = warehouse("snapshot-pin-warehouse")
     val engine = new Engine(spark, dir)
     val a = engine.newSession()
     val b = engine.newSession()
@@ -209,7 +213,7 @@ class SnapshotReadSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("a restarted engine reads the current versions and time-travels to retained ones") {
-    val dir = freshDir("/root/repo/target/graft-tmp/snapshot-restart-warehouse")
+    val dir = warehouse("snapshot-restart-warehouse")
     val first = new Engine(spark, dir)
     first.run("create table h(k int, v bigint)")
     first.run("insert into h select cast(id as int), id from range(0, 50)")
