@@ -3439,17 +3439,22 @@ class Engine(val spark: SparkSession, val warehouse: String) {
   private def planCachePut(key: String, epoch: Long, df: DataFrame): Unit =
     planCache.synchronized { planCache.put(key, (epoch, df)); () }
 
-  /** A fresh, empty directory for `table`'s next version: `v<N>`, or the
-    * first free `v<N>_<k>` while a directory of that name survives (a
-    * rolled-back or dropped version some reader still pins). Callers
-    * write it completely before [[commitVersion]] makes it current.
+  /** A fresh, empty directory for `table`'s next version. Callers write
+    * it completely before [[commitVersion]] makes it current.
     */
-  private def newVersionDir(table: String): java.nio.file.Path = {
-    val n = history.get(table).map(_.length).getOrElse(0)
+  private def newVersionDir(table: String): java.nio.file.Path =
+    freshVersionDir(table, s"v${history.get(table).map(_.length).getOrElse(0)}")
+
+  /** `<base>` under `table`'s history directory, or the first free
+    * `<base>_<k>` while a directory of that name survives (a rolled-back
+    * or dropped version some reader still pins), created empty. A name
+    * is never shared by two versions that exist at the same time.
+    */
+  private def freshVersionDir(table: String, base: String): java.nio.file.Path = {
     val root = historyDir(table)
-    var dir = root.resolve(s"v$n")
+    var dir = root.resolve(base)
     var k = 0
-    while (Files.exists(dir)) { k += 1; dir = root.resolve(s"v${n}_$k") }
+    while (Files.exists(dir)) { k += 1; dir = root.resolve(s"${base}_$k") }
     Files.createDirectories(dir)
     dir
   }
@@ -3486,6 +3491,8 @@ class Engine(val spark: SparkSession, val warehouse: String) {
   private def syncLive(table: String): Unit = {
     val live = liveDir(table)
     val cur = Paths.get(tableDir(table))
+    // a missing version never empties the mirror
+    if (!Files.isDirectory(cur)) return
     def files(root: java.nio.file.Path): Set[String] =
       if (!Files.isDirectory(root)) Set.empty
       else {
@@ -3541,23 +3548,34 @@ class Engine(val spark: SparkSession, val warehouse: String) {
   // ends (see [[takePins]]); VACUUM, DROP and a rollback retire a pinned
   // directory instead of deleting it, and its last unpin deletes it.
 
-  /** pinned path (a version directory or a file inside one) → readers */
+  /** pinned version directory (absolute) → readers */
   private val pins = mutable.Map[java.nio.file.Path, Int]()
-  /** directories no version refers to any more, awaiting their last unpin */
+  /** version directories no version refers to any more, awaiting their
+    * last unpin
+    */
   private val retired = mutable.Set[java.nio.file.Path]()
 
-  private def held(dir: java.nio.file.Path): Boolean =
-    pins.keys.exists(p => p.startsWith(dir) || dir.startsWith(p))
+  private def pinKey(dir: java.nio.file.Path) = dir.toAbsolutePath.normalize
 
-  /** Delete `dir` now, or — while a reader pins it or something inside
-    * it — retire what is pinned and delete the rest. True when nothing
-    * was left behind.
+  /** Delete version directory `dir` now, or retire it while a reader pins
+    * it. True when it is gone.
     */
   private def reclaim(dir: java.nio.file.Path): Boolean = pins.synchronized {
     if (!Files.exists(dir)) true
-    else if (!held(dir)) { deleteRecursively(dir, keepRoot = false); true }
-    else if (pins.keys.exists(dir.startsWith)) { retired += dir; false }
-    else children(dir).map(reclaim).forall(identity)
+    else if (pins.contains(pinKey(dir))) { retired += pinKey(dir); false }
+    else { deleteRecursively(dir, keepRoot = false); true }
+  }
+
+  /** Reclaim everything under `table`'s history directory (DROP, RENAME,
+    * a failed CREATE TABLE AS): pinned versions stay until their last
+    * unpin, the rest goes now.
+    */
+  private def reclaimHistory(table: String): Unit = pins.synchronized {
+    val root = historyDir(table)
+    if (Files.isDirectory(root)) {
+      children(root).foreach(reclaim)
+      if (children(root).isEmpty) Files.delete(root)
+    }
   }
 
   private def children(dir: java.nio.file.Path): List[java.nio.file.Path] = {
@@ -3567,7 +3585,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
   }
 
   private def isRetired(dir: java.nio.file.Path): Boolean =
-    pins.synchronized(retired.exists(dir.startsWith))
+    pins.synchronized(retired.contains(pinKey(dir)))
 
   /** False once VACUUM reclaimed (or retired) version `v`'s directory. */
   private def versionAvailable(table: String, v: Int): Boolean = {
@@ -3575,16 +3593,18 @@ class Engine(val spark: SparkSession, val warehouse: String) {
     Files.exists(dir) && !isRetired(dir)
   }
 
-  /** Warehouse paths the plan of `df` reads: the root of every file
-    * relation (a version directory, or the files a raw scan names).
+  /** Version directories the plan of `df` reads: the `.history/<t>/<dir>`
+    * ancestor of every file relation's roots (a version directory, a
+    * partition directory or the files a raw scan names).
     */
   private def planRoots(df: DataFrame): Seq[java.nio.file.Path] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val wh = Paths.get(warehouse).toAbsolutePath.normalize
+    val hist = pinKey(Paths.get(warehouse, ".history"))
     df.queryExecution.optimizedPlan.collectWithSubqueries {
       case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location.rootPaths
-    }.flatten.map(p => Paths.get(p.toUri).normalize).filter(_.startsWith(wh))
-      .distinct
+    }.flatten.map(p => Paths.get(p.toUri).normalize)
+      .filter(p => p.startsWith(hist) && hist.relativize(p).getNameCount >= 2)
+      .map(p => hist.resolve(hist.relativize(p).subpath(0, 2))).distinct
   }
 
   /** Make a statement's result safe to execute with no lock held (the
@@ -3639,7 +3659,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
         val n = pins.getOrElse(p, 0) - 1
         if (n > 0) pins(p) = n else pins.remove(p)
       }
-      retired.toList.filterNot(held).foreach { r =>
+      retired.toList.filterNot(pins.contains).foreach { r =>
         retired -= r
         if (Files.exists(r)) deleteRecursively(r, keepRoot = false)
       }
@@ -5141,7 +5161,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
         partitions.remove(name)
         rowCounts.remove(name); colStatsLedger.remove(name)
         spark.sql(s"DROP TABLE IF EXISTS `$name`")
-        reclaim(historyDir(name))
+        reclaimHistory(name)
         throw e
     }
   }
@@ -5467,10 +5487,26 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       if (t.equalsIgnoreCase(from)) indexes(ix) = (to, c, m, o)
     }
     // history travels with the table (versions + IVM deltas under the
-    // new name): linked, as a reader may still scan the old directories
-    linkTree(historyDir(from), historyDir(to))
-    reclaim(historyDir(from))
-    history.remove(from).foreach(log => history(to) = log)
+    // new name): linked, as a reader may still scan the old directories.
+    // Each version takes a name free under the new one — a dropped
+    // table's directories may survive there until their readers end.
+    history.remove(from).foreach { log =>
+      history(to) = log.map { c =>
+        val src = historyDir(from).resolve(c.dir)
+        if (!Files.isDirectory(src)) c // vacuumed
+        else {
+          val dst = freshVersionDir(to, c.dir)
+          linkTree(src, dst)
+          c.copy(dir = dst.getFileName.toString)
+        }
+      }
+    }
+    if (Files.isDirectory(historyDir(from)))
+      children(historyDir(from)).filter { d =>
+        val n = d.getFileName.toString
+        n.startsWith("d") || n.startsWith("u")
+      }.foreach(d => linkTree(d, historyDir(to).resolve(d.getFileName.toString)))
+    reclaimHistory(from)
     defaults.remove(from).foreach(d => defaults(to) = d)
     rowCounts.remove(from).foreach(n => rowCounts(to) = n)
     colStatsLedger.remove(from).foreach(cs => colStatsLedger(to) = cs)
@@ -5542,7 +5578,7 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       if (Files.exists(liveDir(name)))
         deleteRecursively(liveDir(name), keepRoot = false)
       // a version a reader still scans goes at its last unpin
-      reclaim(historyDir(name))
+      reclaimHistory(name)
     } else views.remove(name)
     spark.catalog.dropTempView(name)
     // a session dropping its own temp object by alias arrives here with
@@ -7638,8 +7674,12 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       }
     // the commit logs BEFORE the tables loop: each log's last entry is
     // the current-version pointer register() points the catalog at
+    // tables whose current version predates version directories
+    val unversioned = mutable.Set[String]()
     if (root.has("history"))
       fields(root.get("history")).foreach { e =>
+        val last = e.getValue.size() - 1
+        if (last >= 0 && !e.getValue.get(last).has("dir")) unversioned += e.getKey
         history(e.getKey) = (0 until e.getValue.size()).map { i =>
           val n = e.getValue.get(i)
           Commit(n.get("ts").asLong(), n.get("op").asText(),
@@ -7652,8 +7692,20 @@ class Engine(val spark: SparkSession, val warehouse: String) {
       val t = e.getKey
       val schema = StructType.fromDDL(e.getValue.get("ddl").asText())
       tables(t) = (schema, texts(e.getValue.get("pk")))
-      if (!history.contains(t))
+      if (!history.contains(t)) {
         history(t) = Vector(Commit(0L, "create table", schema.toDDL, "v0"))
+        unversioned += t
+      }
+      // a warehouse written before version directories keeps the current
+      // version only in warehouse/<t> (earlier ones under their v<i>):
+      // adopt those files as its directory. A v<cur> already there was
+      // left by a commit that died mid-archive: relinked from the live one.
+      if (unversioned(t) && Files.isDirectory(liveDir(t))) {
+        val cur = versionDir(t, history(t).length - 1)
+        if (Files.exists(cur)) deleteRecursively(cur, keepRoot = false)
+        Files.createDirectories(cur)
+        linkTree(liveDir(t), cur)
+      }
       // crash debris: a version directory no commit names was written by
       // a statement that died before its pointer flip
       val named = history(t).map(_.dir).toSet

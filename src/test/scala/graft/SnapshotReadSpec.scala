@@ -212,6 +212,57 @@ class SnapshotReadSpec extends AnyFunSuite with TimeLimits {
     engine.closeSession(b)
   }
 
+  test("a table renamed onto a dropped, still-pinned name reads only its own rows") {
+    val dir = warehouse("snapshot-rename-warehouse")
+    val engine = new Engine(spark, dir)
+    val a = engine.newSession()
+    val b = engine.newSession()
+    engine.run("create table n(v bigint)", b)
+    engine.run("insert into n select id from range(0, 10)", b) // n at v1
+    val pinned = engine.run("select sum(v) from n", a)
+    engine.run("drop table n", b) // n's v1 is retired, not deleted
+    engine.run("create table m(v bigint)", b)
+    engine.run("insert into m values (100), (101), (102)", b) // m at v1
+    engine.run("alter table m rename to n", b)
+    def sumOf(sql: String) = engine.run(sql, b).collect()(0).getLong(0)
+    failAfter(limit) {
+      assert(sumOf("select sum(v) from n") == 303L)
+      assert(sumOf("select sum(v) from n version as of 1") == 303L)
+      assert(pinned.collect()(0).getLong(0) == 45L)
+      engine.run("select 1", a) // ends the pin: the dropped table's v1 goes
+      assert(sumOf("select sum(v) from n") == 303L)
+      assert(sumOf("select sum(v) from n version as of 1") == 303L)
+    }
+    engine.closeSession(a)
+    engine.closeSession(b)
+  }
+
+  test("a warehouse whose current versions live only in warehouse/<t> reopens intact") {
+    val dir = warehouse("snapshot-legacy-warehouse")
+    val first = new Engine(spark, dir)
+    first.run("create table l(k int, v bigint)")
+    first.run("insert into l select cast(id as int), id from range(0, 20)")
+    first.run("update l set v = v + 100 where k < 5")
+    // the layout before version directories: the current version's files
+    // only in warehouse/l, earlier versions under .history/l/v<i>, and
+    // commit-log entries that name no directory
+    val manifest = Paths.get(s"$dir/_catalog.json")
+    Files.writeString(manifest,
+      Files.readString(manifest).replaceAll(""",\s*"dir":\s*"[^"]*"""", ""))
+    val cur = Paths.get(s"$dir/.history/l/v2")
+    Files.walk(cur).sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))
+    val again = new Engine(spark, dir)
+    def one(sql: String) = again.run(sql).collect()(0)
+    val now = one("select count(*), sum(v) from l")
+    assert(now.getLong(0) == 20L && now.getLong(1) == (0L until 20L).sum + 500L)
+    assert(one("select sum(v) from l version as of 1").getLong(0) == (0L until 20L).sum)
+    assert(Files.isDirectory(cur))
+    again.run("delete from l where k >= 10")
+    assert(one("select count(*) from l").getLong(0) == 10L)
+    assert(one("select count(*) from l version as of 2").getLong(0) == 20L)
+  }
+
   test("a restarted engine reads the current versions and time-travels to retained ones") {
     val dir = warehouse("snapshot-restart-warehouse")
     val first = new Engine(spark, dir)
